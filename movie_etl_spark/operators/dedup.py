@@ -673,9 +673,7 @@ def dup_clusters(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 25,
     driver_cc_max_edges: int = 2_000_000,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list:
     ``(doc_id, cluster_id)`` with cluster_id = the MIN doc id in the
@@ -687,58 +685,34 @@ def dup_clusters(
     ``nodes`` supplies the full id universe (docs in no pair become
     singleton clusters of themselves).
 
-    Scale design. The pair list is dedup OUTPUT — orders of magnitude
-    smaller than the corpus — so two paths, chosen by measured edge
-    count:
+    The pair list is dedup OUTPUT — orders of magnitude smaller than
+    the corpus, and below the driver bound at every supported scale
+    (sf <= 1) — so the path is chosen by the observed edge count:
 
     - ``<= driver_cc_max_edges``: ONE bounded collect and a driver-side
       union-find (O(E α), ~100 ms for 2M edges; 2M × 16 B ≈ 32 MB on
       the driver). The same documented trade as
       corpus._two_phase_prefix: a metadata-sized collect beats 3+
       distributed rounds of fixed shuffle overhead.
-    - above the bound: hash-min label propagation, the standard
-      MapReduce-era CC algorithm — every node starts labeled with its
-      own id, each round takes the min of its and its neighbors'
-      labels (one join + one groupBy per round, localCheckpoint to cut
-      lineage). Rounds = component diameter; near-dup components are
-      stars (exact-fingerprint collapse) or dense LSH cliques,
-      diameter 2-3. ``max_iterations`` guards pathological chains.
-      For genuinely long-chain graphs pass ``algorithm="star"`` to run
-      graph_algos.connected_components_star instead (alternating
-      large-star/small-star [Kiveris et al. 2014], O(log^2 n) rounds
-      on ANY diameter — equality-tested against this path).
+    - above the bound, which bounds driver memory:
+      graph_algos.connected_components_star (alternating
+      large-star/small-star [Kiveris et al. 2014], O(log^2 n) rounds on
+      any diameter).
 
     Both paths are equality-tested against each other
     (tests/test_text_dedup.py::test_dup_clusters_paths_agree).
     """
     # persist the pair list FIRST: it is read at least twice (the
-    # bounded probe, then the large path's count/edge union — or the
-    # probe alone when it completes), and without the persist each
-    # consumer re-runs the entire upstream dedup pipeline (measured
-    # ~2x the dd3 cost at sf0.1)
+    # bounded probe, then the star path's edge reads — or the probe
+    # alone when it completes), and without the persist each consumer
+    # re-runs the entire upstream dedup pipeline (measured ~2x the dd3
+    # cost at sf0.1)
     pairs = _persist(pairs.select(id_a, id_b))
     spark = pairs.sparkSession
     # path probe: collect AT MOST bound+1 rows. If the limit truncates
-    # we know it's the large path (and n_edges only sizes the loop
-    # partitioning, so count() is deferred there); if it doesn't, the
-    # collected rows ARE the complete edge list — one job instead of a
-    # count() followed by a collect()
-    if algorithm == "star":
-        from movie_etl_spark.operators.graph_algos import (
-            connected_components_star,
-        )
-
-        clustered = connected_components_star(
-            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        ).select(
-            F.col("node_id").alias(id_col),
-            F.col("component_id").alias("cluster_id"),
-        )
-        singletons = nodes.select(F.col(id_col)).join(
-            clustered.select(id_col), id_col, "left_anti"
-        ).withColumn("cluster_id", F.col(id_col))
-        return clustered.unionByName(singletons)
-
+    # it's the star path; if it doesn't, the collected rows ARE the
+    # complete edge list — one job instead of a count() followed by a
+    # collect()
     probe = pairs.limit(driver_cc_max_edges + 1).collect()
 
     if len(probe) <= driver_cc_max_edges:
@@ -772,70 +746,16 @@ def dup_clusters(
             ),
         )
     else:
-        n_edges = pairs.count()
-        edges = pairs.select(
-            F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-        ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        # only edge endpoints can ever change label — iterate over THAT
-        # set, never the full corpus. Loop partitioning is sized from
-        # the edge count: default shuffle partitioning would pay
-        # per-task overhead on every round.
-        n_parts = max(1, min(n_edges // 1_000_000, 2048))
-        labels = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .repartition(n_parts, "node")
-            .withColumn("label", F.col("node"))
-            .localCheckpoint(eager=False)
+        from movie_etl_spark.operators.graph_algos import (
+            connected_components_star,
         )
-        # convergence probe: labels are monotonically non-increasing,
-        # so the fixpoint is reached exactly when sum(label) stops
-        # decreasing — one cheap aggregate per round instead of an
-        # old-vs-new join (the lazy checkpoint makes it double as the
-        # round's materializer: one job per round, not two)
-        # per-round lineage cut via the shared helper so the
-        # reliable-checkpoint deployment knob (graph_algos._cut_lineage)
-        # covers this loop too; default path unchanged (lazy local cut)
-        from movie_etl_spark.operators.graph_algos import _cut_lineage
 
-        prev_sum = None
-        converged = False
-        for _round in range(max_iterations):
-            msgs = edges.join(
-                labels.select(F.col("node").alias("dst"), "label"), "dst"
-            ).select(F.col("src").alias("node"), "label")
-            labels = _cut_lineage(
-                labels.unionByName(msgs)
-                # pre-hash on node at loop-sized parallelism: the
-                # groupBy reuses this exact partitioning
-                .repartition(n_parts, "node")
-                .groupBy("node")
-                .agg(F.min("label").alias("label")),
-                _round,
-                5,
-            )
-            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-        if not converged:
-            # a component with diameter > max_iterations: unconverged
-            # labels are NOT cluster ids, and returning them would be
-            # silently wrong. Fall back to the any-diameter algorithm
-            # (O(log^2 n) rounds) instead of guessing.
-            from movie_etl_spark.operators.graph_algos import (
-                connected_components_star,
-            )
-
-            clustered = connected_components_star(edges).select(
-                F.col("node_id").alias(id_col),
-                F.col("component_id").alias("cluster_id"),
-            )
-        else:
-            clustered = labels.select(
-                F.col("node").alias(id_col), F.col("label").alias("cluster_id")
-            )
+        clustered = connected_components_star(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        ).select(
+            F.col("node_id").alias(id_col),
+            F.col("component_id").alias("cluster_id"),
+        )
     singletons = nodes.select(F.col(id_col)).join(
         clustered.select(id_col), id_col, "left_anti"
     ).withColumn("cluster_id", F.col(id_col))

@@ -7,8 +7,19 @@ store itself would run. Here the graph is an edge DataFrame and the
 algorithm is join-based message passing — the BSP/Pregel shape: each
 iteration is ONE shuffle (groupBy destination), the edge list is
 computed once and persisted, and rank state stays co-partitioned with
-the aggregation key, so an iteration at 100 TB costs one bounded
-shuffle of the rank table, not a rebuild of the graph.
+the aggregation key, so an iteration costs one shuffle of the rank
+table, not a rebuild of the graph.
+
+Every loop cuts lineage once per iteration with a lazy
+``localCheckpoint``: each reference of the loop state becomes a leaf,
+so Catalyst plans one join/agg layer per iteration instead of
+replaying every earlier iteration's subtree. The trade (ADVICE r18):
+every iteration's state stays persisted (MEMORY_AND_DISK) for the
+session, outside cache_tracked because local-checkpoint blocks cannot
+be safely unpersisted, and the cut lineage is not fault-tolerant. On
+``local[N]``, the only supported master, the executor is the driver
+JVM, so there is no executor loss for a reliable checkpoint to
+survive.
 
 Arithmetic is FIXED-POINT INTEGER on purpose: float PageRank sums
 neighbor contributions in a nondeterministic order, so two engines (or
@@ -17,8 +28,7 @@ impossible. With ranks scaled to integers (1.0 == `scale`) and damping
 as a rational (17/20 == 0.85), every operation is exact integer math —
 `sum` is order-independent, `div` is truncating division on
 non-negatives in both Spark and DuckDB — so the result is bit-stable
-across engines, partitionings, and retries. Determinism-by-integers is
-also the deploy-grade choice: reproducible ranks across cluster runs.
+across engines, partitionings, and retries.
 """
 
 from __future__ import annotations
@@ -28,57 +38,12 @@ from pyspark.sql import functions as F
 
 from movie_etl_spark.session import cache_tracked
 
-#: conf key that opts the BSP loops into RELIABLE checkpoints (see
-#: :func:`_cut_lineage`); off by default so local plans stay byte-stable.
-RELIABLE_CHECKPOINT_CONF = "spark.movie_etl.reliableCheckpoint.enabled"
-
-
-def _cut_lineage(df: DataFrame, iteration: int, checkpoint_every: int) -> DataFrame:
-    """Per-iteration lineage cut for the iterative BSP loops.
-
-    Default path: lazy ``localCheckpoint`` — each reference of the
-    state becomes a leaf, so Catalyst plans one join/agg layer per
-    iteration instead of replaying every earlier iteration's subtree
-    (plan growth linear, not quadratic/exponential). Two trades, both
-    deliberate (ADVICE r18): (a) every iteration's state RDD stays
-    persisted (MEMORY_AND_DISK) for the session — node-sized frames,
-    O(iterations) of them, outside cache_tracked because local-
-    checkpoint blocks cannot be safely unpersisted; (b) the truncated
-    lineage is NOT fault-tolerant — on a real cluster an executor loss
-    mid-loop fails the job, and the stats-less LogicalRDD leaf pins
-    these joins to sort-merge (Catalyst can never pick broadcast for a
-    leaf it cannot size).
-
-    Cluster deployments close the fault-tolerance gap by setting
-    ``spark.movie_etl.reliableCheckpoint.enabled=true`` AND
-    ``sc.setCheckpointDir(<hdfs/object-store path>)``: every
-    ``checkpoint_every``-th iteration then writes the state through
-    ``DataFrame.checkpoint`` (reliable storage — recomputable-after-
-    executor-loss), while the other iterations keep the cheap local
-    cut. With the knob off (the default, and the bench configuration)
-    the plan shape is unchanged — pinned by the pagerank/BFS plan
-    tests. ``checkpoint_every <= 0`` disables the reliable cadence.
-    """
-    if (
-        checkpoint_every > 0
-        and (iteration + 1) % checkpoint_every == 0
-    ):
-        spark = df.sparkSession
-        if (
-            spark.conf.get(RELIABLE_CHECKPOINT_CONF, "false") == "true"
-            and spark.sparkContext.getCheckpointDir() is not None
-        ):
-            return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
 def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = 3,
     scale: int = 1_000_000,
     damp_num: int = 17,
     damp_den: int = 20,
-    checkpoint_every: int = 5,
     nodes: DataFrame | None = None,
     redistribute_dangling: bool = False,
 ) -> DataFrame:
@@ -109,14 +74,9 @@ def pagerank_fixed_point(
     is a 1-row aggregate attached by broadcast crossJoin — never a
     driver-side collect.
 
-    Lineage: EVERY iteration cuts the chain (lazy ``localCheckpoint``
-    via :func:`_cut_lineage`) so planning stays linear in iterations —
-    see the helper's docstring for the storage-accumulation and
-    fault-tolerance trades that come with it. ``checkpoint_every``
-    selects the RELIABLE-checkpoint cadence when the deployment opts
-    in (``spark.movie_etl.reliableCheckpoint.enabled=true`` plus a
-    ``setCheckpointDir``); with the knob off (default) it has no
-    effect on the per-iteration local cut.
+    Lineage: EVERY iteration cuts the chain (lazy ``localCheckpoint``)
+    so planning stays linear in iterations — see the module docstring
+    for the storage and fault-tolerance trade.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -169,7 +129,7 @@ def pagerank_fixed_point(
             "src", "deg", F.lit(scale).cast("long").alias("rank")
         )
         for _i in range(iterations):
-            state = _cut_lineage(state, _i, checkpoint_every)
+            state = state.localCheckpoint(eager=False)
             incoming = (
                 edges_deg.join(state.select("src", "rank"), "src")
                 .select("dst", F.expr("rank div deg").alias("contrib"))
@@ -209,9 +169,8 @@ def pagerank_fixed_point(
         # the execution, never the planning). The cut makes each
         # iteration's plan a leaf + one join/agg layer, the same shape
         # the dangling variant, gr3's BFS, and connected_components_star
-        # use; trades and the reliable-checkpoint opt-in live in
-        # _cut_lineage.
-        ranks = _cut_lineage(ranks, _i, checkpoint_every)
+        # use.
+        ranks = ranks.localCheckpoint(eager=False)
         incoming = (
             edges_deg.join(ranks, "src")
             .select("dst", F.expr("rank div deg").alias("contrib"))
@@ -232,13 +191,12 @@ def pagerank_fixed_point(
 def connected_components_star(
     edges: DataFrame,
     max_rounds: int = 20,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC 2014): converges in O(log^2 n) rounds on ANY graph
-    diameter, vs O(diameter) for hash-min label propagation — the
-    upgrade path dup_clusters documents for long-chain components.
+    diameter, vs O(diameter) for hash-min label propagation. It is
+    dup_clusters' distributed path, used above its driver-side bound.
 
     ``edges`` needs long-id columns ``(src, dst)`` (undirected
     semantics; self-loops ignored). Returns ``(node_id, component_id)``
@@ -257,6 +215,9 @@ def connected_components_star(
     every edge is (member, component_min)). The check is an exact
     set-equality probe (exceptAll both ways is overkill: star output
     is deduplicated, so equal counts + empty difference suffice).
+    Raises ``RuntimeError`` when ``max_rounds`` rounds pass without a
+    fixpoint: the edges left then are not (member, component_min)
+    pairs, and returning them as component ids would be silently wrong.
     """
     e = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -291,9 +252,7 @@ def connected_components_star(
             .unionByName(mins2.select("src", F.col("m").alias("dst")))
             .distinct()
         )
-        # per-round lineage cut; _cut_lineage documents the trades and
-        # the reliable-checkpoint opt-in selected by checkpoint_every
-        small = _cut_lineage(small, _round, checkpoint_every)
+        small = small.localCheckpoint(eager=False)
         # exact fixpoint probe: both sets are distinct, so equal size +
         # empty one-sided difference == equality
         if (
@@ -303,6 +262,11 @@ def connected_components_star(
             e = small
             break
         e = small
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after {max_rounds} "
+            "rounds; the edge set is not yet a star forest"
+        )
     members = e.select(
         F.col("src").alias("node_id"), F.col("dst").alias("component_id")
     )
@@ -316,7 +280,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Multi-source BFS hop distances over a directed edge list.
 
@@ -337,7 +300,7 @@ def bfs_distances(
     deterministic. All-integer (hop counts), so results are bit-stable
     and an unrolled recursive-SQL oracle can hash-match exactly.
 
-    At 100 TB: the dist table is one row per *reached* node and stays
+    The dist table is one row per *reached* node and stays
     co-partitioned with the groupBy key; each hop shuffles only that
     table plus the matched edges, never the full graph state.
     """
@@ -354,9 +317,8 @@ def bfs_distances(
         # Catalyst still plans (gr3's formatted plan: 68 Exchange nodes
         # for 3 hops; 18 after). The lazy per-hop localCheckpoint makes
         # every reference a leaf — linear plan growth, the same cut gr2
-        # and connected_components_star use (r18); trades and the
-        # reliable-checkpoint opt-in live in _cut_lineage.
-        dist = _cut_lineage(dist, _hop, checkpoint_every)
+        # and connected_components_star use (r18).
+        dist = dist.localCheckpoint(eager=False)
         relaxed = e.join(dist, "src").select(
             F.col("dst").alias("src"), (F.col("dist") + 1).alias("dist")
         )

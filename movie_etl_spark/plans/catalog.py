@@ -3424,10 +3424,10 @@ def q_t4_bpe_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="connected components over the dd3 near-dup pairs -> per-doc "
     "cluster_id (min id in component, the canonical survivor): pairwise "
     "dedup output becomes keep/drop decisions — A~B and B~C collapse to "
-    "one survivor even though A~C was never emitted. Hash-min label "
-    "propagation, rounds = component diameter (stars/cliques: 2-3), "
-    "driver-side loop control only (operators.dedup.dup_clusters); the "
-    "oracle is the same fixpoint via DuckDB's recursive CTE",
+    "one survivor even though A~C was never emitted. One bounded collect "
+    "and a driver-side union-find; above the driver bound, large-star/"
+    "small-star rounds (operators.dedup.dup_clusters); the oracle is "
+    "the min-label fixpoint via DuckDB's recursive CTE",
 )
 def q_dd7_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_etl_spark.operators.dedup import dup_clusters
@@ -4397,7 +4397,7 @@ def q_st6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="SemDeDup-style semantic dedup: connected components over the "
     "dd6 embedding near-dup pairs -> (vec_id, cluster_id = min id in "
-    "component). Same bounded union-find / hash-min label propagation "
+    "component). Same bounded union-find / large-star/small-star paths "
     "as dd7 (operators.dedup.dup_clusters), pairs from the banded "
     "sign-LSH + exact-verify pipeline — never all-pairs",
 )

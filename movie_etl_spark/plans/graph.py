@@ -27,53 +27,6 @@ from movie_etl_spark.operators.reshape import (
 )
 from movie_etl_spark.operators.upsert import dedup_by_key
 
-#: largest movie count for which build_movie_graph's reuse_shared
-#: checkpoints stay in memory (MEMORY_AND_DISK); above it they go
-#: DISK_ONLY — see the size-conditional note inside build_movie_graph.
-#: 2M keeps the measured-flat sf1 point (1.5M movies, ~0.5 GB) in
-#: memory; factor-30+ corpora (4.5M/15M movies, 1-3 GB of node
-#: strings) take the disk trade.
-_SHARED_NODES_MEMORY_MAX = 2_000_000
-
-#: when False, the reuse_shared edge builds skip their SHUFFLE_HASH
-#: hints and let the planner SortMergeJoin the checkpointed node sides
-#: (spillable, slower — the hash builds' in-memory relations are the
-#: known non-spillable term in g2's heap floor).  Normally True; the
-#: heap-conditional gate below flips to SMJ only when the corpus is
-#: past _SHARED_NODES_MEMORY_MAX AND the JVM heap is below
-#: _HASH_BUILD_MIN_HEAP_BYTES.  Measured (r15, sf10 = factor 100):
-#: hash builds 176.7 s on 8g but OOM at 6g; SMJ completes at 6g in
-#: 224.0 s (heap peak 5825 MB, execution 3506 — the sort spills
-#: instead of dying).  The +27% wall is the price of the last 2 GiB;
-#: see BASELINE.md "r15: g2 memory story closed".
-_HASH_BUILD_EDGE_NODES = True
-
-#: smallest JVM heap on which the factor-30+ hash-build relations are
-#: known to fit (measured: complete at 7g, OOM at 6g — BASELINE.md r14
-#: g2 table).  Below this, big-corpus edge builds fall back to SMJ.
-_HASH_BUILD_MIN_HEAP_BYTES = 7 * 1024**3
-
-
-def _session_heap_bytes(df: DataFrame) -> int:
-    """JVM heap budget the edge builds will run under.  local[*]
-    executes in the driver JVM (driver.memory); a real cluster's
-    builds live in executors (executor.memory)."""
-    try:
-        sc = df.sparkSession.sparkContext
-        # true local mode only: 'local', 'local[N]', 'local[N,F]'.
-        # 'local-cluster[...]' runs SEPARATE executor JVMs sized by
-        # executor.memory, so it must fall through (ADVICE r15)
-        master = sc.master
-        key = (
-            "spark.driver.memory"
-            if master == "local" or master.startswith("local[")
-            else "spark.executor.memory"
-        )
-        return int(sc._jsc.sc().conf().getSizeAsBytes(key, "1g"))
-    except Exception:  # conf probe must never fail the build (e.g. a
-        return 1024**3  # Connect session without _jsc -> SMJ, the safe side
-
-
 def movie_nodes(clean_movies: DataFrame) -> DataFrame:
     """Movie node table (flows/etl_flow.py:250-261 property projection)."""
     return dedup_by_key(
@@ -118,56 +71,25 @@ def build_movie_graph(
     the join key and AQE handles skew (one blockbuster movie with a
     10k-person crew is exactly the skewed-key case).
 
-    ``reuse_shared`` materializes (localCheckpoint) the two node tables
-    every edge build joins against — Movie and Person — so consumers
-    that execute MANY of the returned tables as separate actions (the
-    17-table full materialization; g2's parity sweep) don't re-run the
-    dedup-window lineage per action. The storage level is
-    size-conditional (r14, VERDICT r13 item 3) — in memory for small
-    corpora, DISK_ONLY past ``_SHARED_NODES_MEMORY_MAX`` movies (see
-    the inline note). The EAGER materialization also matters: it runs
-    the two dedup-window sorts to completion BEFORE the many-branch
-    consumer action, so their execution peaks don't stack on the
-    branch aggregates' (measured: splitting key-only checkpoints out
-    and letting the full frames recompute inside the 17-branch union
-    raised the sf10 execution peak 3008 -> 4735 MB and the wall
-    218 -> 350 s). Since r19 the two materializations run CONCURRENTLY
-    with each other (they are independent jobs over the same
-    checkpointed corpus — guide §2.6) while still preceding the branch
-    action. At cluster scale the same role is played by writing
-    nodes first and reading them back for the edge builds; leave False
-    when only one or two tables will execute.
+    ``reuse_shared`` materializes (localCheckpoint, MEMORY_AND_DISK)
+    the two node tables every edge build joins against — Movie and
+    Person — so consumers that execute MANY of the returned tables as
+    separate actions (the 17-table full materialization; g2's parity
+    sweep) don't re-run the dedup-window lineage per action, and the
+    edge builds hash-build those checkpointed node sides. At sf1 the
+    two tables hold about 1.5M movies and ~0.5 GB, so they stay in
+    memory at every supported scale. The EAGER materialization also
+    matters: it runs the two dedup-window sorts to completion BEFORE
+    the many-branch consumer action, so their execution peaks don't
+    stack on the branch aggregates' (measured: splitting key-only
+    checkpoints out and letting the full frames recompute inside the
+    17-branch union raised the sf10 execution peak 3008 -> 4735 MB
+    and the wall 218 -> 350 s). Since r19 the two materializations run
+    CONCURRENTLY with each other (they are independent jobs over the
+    same checkpointed corpus — guide §2.6) while still preceding the
+    branch action. Leave False when only one or two tables will
+    execute.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    shared_level = StorageLevel.MEMORY_AND_DISK
-    hash_builds = reuse_shared and _HASH_BUILD_EDGE_NODES
-    if reuse_shared:
-        # Size-conditional storage level (r14): one cheap count picks
-        # the trade. Small corpora keep the node tables in memory —
-        # the 17-branch re-reads are free and the frames are a few MB.
-        # Past the cap the checkpoints go DISK_ONLY: at factor 100 the
-        # in-memory level held ~3 GB of node strings in storage memory
-        # for data the edge builds never read (they select the key
-        # before their semi joins), and freeing the unified pool for
-        # the branch sorts measured g2 sf10 218 -> 176.7 s with the
-        # query completing at 7 GiB where 8 was required — while at
-        # bench scale the catalog-warm g2 cell paid ~+2 s of real disk
-        # re-reads for memory it never needed back.
-        if clean_movies.select("movie_id").count() > _SHARED_NODES_MEMORY_MAX:
-            shared_level = StorageLevel.DISK_ONLY
-            # Heap-conditional join strategy (r15): the SHUFFLE_HASH
-            # builds' hash relations are non-spillable — at factor-30+
-            # node counts they are what holds g2's floor at 7 GiB
-            # (measured: OOM at 6g). On a smaller heap the spillable
-            # SortMergeJoin completes where hash dies (sf10/6g: SMJ
-            # 224.0 s vs hash OOM; hash keeps the 176.7 s fast path
-            # whenever the heap affords it). Small corpora never enter
-            # here — their relations are a few MB and hash is strictly
-            # better.
-            if _session_heap_bytes(clean_movies) < _HASH_BUILD_MIN_HEAP_BYTES:
-                hash_builds = False
-
     movies = movie_nodes(clean_movies)
     persons = person_nodes(clean_movies)
     if reuse_shared:
@@ -188,16 +110,17 @@ def build_movie_graph(
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
+        from pyspark.storagelevel import StorageLevel
 
         spark = clean_movies.sparkSession
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_movies = pool.submit(
                 inheritable_thread_target(spark)(movies.localCheckpoint),
-                storageLevel=shared_level,
+                storageLevel=StorageLevel.MEMORY_AND_DISK,
             )
             f_persons = pool.submit(
                 inheritable_thread_target(spark)(persons.localCheckpoint),
-                storageLevel=shared_level,
+                storageLevel=StorageLevel.MEMORY_AND_DISK,
             )
             movies = f_movies.result()
             persons = f_persons.result()
@@ -236,7 +159,7 @@ def build_movie_graph(
         build_edges(
             acted, movies, persons, "movie_id", "person_id", "ACTED_IN",
             payload=["role"],
-            hash_build_nodes=hash_builds,
+            hash_build_nodes=reuse_shared,
         ),
         ["relationship_id"],
         order_col="role",
@@ -253,7 +176,7 @@ def build_movie_graph(
     # never sorted (see operators/joins.py)
     crew_heads = movies.select("movie_id")
     crew_tails = persons.select("person_id")
-    if hash_builds:
+    if reuse_shared:
         crew_heads = crew_heads.hint("shuffle_hash")
         crew_tails = crew_tails.hint("shuffle_hash")
     crew_edges = (

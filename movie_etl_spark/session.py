@@ -1,13 +1,15 @@
 """SparkSession factory and test-table IO.
 
-Scale notes (100 TB / 1000-executor design intent)
---------------------------------------------------
+Supported envelope
+------------------
+- The session always runs on ``local[N]`` (one JVM: the executors are
+  the driver), over scale factors sf0.001 to sf1. Every operator has
+  one code path per input in that envelope; a branch that could only
+  fire beyond it is not kept.
 - AQE is always on: runtime coalescing of shuffle partitions, skew-join
-  splitting, and dynamic join-strategy switching do at runtime what we
-  cannot know statically at 100 TB.
-- ``spark.sql.shuffle.partitions`` defaults to the local core count here;
-  on a real cluster set it (or rely on AQE's coalescing with a high
-  initial value) to ~2-3x total executor cores.
+  splitting, and dynamic join-strategy switching size each stage from
+  what it actually sees.
+- ``spark.sql.shuffle.partitions`` defaults to the local core count.
 - Session timezone is pinned to UTC so timestamp semantics are stable
   across engines (the DuckDB oracle is UTC-naive).
 - Arrow is enabled for all pandas interchange (vectorized UDF path).
@@ -193,20 +195,6 @@ def release_caches(blocking: bool = False, destroy_broadcasts: bool = False) -> 
         bc.destroy() if destroy_broadcasts else bc.unpersist(blocking=blocking)
 
 
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """A size conf as bytes; Spark accepts '128m'/'4194304'-style values."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], m
-            break
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
-
-
 #: logical operators under which the first executed stage is no longer
 #: the file scan (a shuffle or broadcast re-partitions the data), so a
 #: file-size split estimate says nothing about the frame's runtime
@@ -215,24 +203,6 @@ _NON_SCAN_PLAN_NODES = (
     "Join", "Aggregate", "Window", "Sort", "Repartition",
     "Deduplicate", "Distinct", "GlobalLimit",
 )
-
-#: split-estimate memo (r19, VERDICT r18 item #4). ensure_parallelism
-#: runs ~41 times per catalog pass, mostly over the same handful of
-#: tables, and the per-file ``getsize`` loop is O(files) driver work
-#: per call. The memo keys on the resolved file list plus every conf
-#: the estimate depends on, so a repeat call over the same table is a
-#: dict hit with zero stat syscalls. Process-local metadata only —
-#: never persisted, never keyed on query results — and bench/oracle
-#: inputs are immutable parquet for the life of a session, so cached
-#: sizes cannot go stale mid-run.
-_SPLIT_MEMO: dict[tuple, int] = {}
-_SPLIT_MEMO_MAX = 128  # distinct (file-set, conf) shapes per session
-
-#: above this many files the size loop STRIDE-SAMPLES instead of
-#: stat-ing every file (total extrapolated from the sample mean), so
-#: a million-file local scan costs 10k stats once, then memo hits —
-#: never O(files) stat syscalls on the hot path.
-_SPLIT_STAT_CAP = 10_000
 
 
 def _estimate_scan_partitions(df: DataFrame) -> int | None:
@@ -245,21 +215,19 @@ def _estimate_scan_partitions(df: DataFrame) -> int | None:
     where padded charges every file its open cost. The estimate is
     within ±1 split of the planner for single-directory parquet scans
     (packing boundaries differ), which is harmless here: the only
-    consumer compares it against the session's core count, and the
-    decision band is orders of magnitude wide at both ends (KB-scale
-    test inputs vs TB-scale production scans).
+    consumer compares it against the session's core count, and a
+    one-split error can only move a frame across that line, never
+    change the rows it holds.
 
     Returns None (caller falls back to the exact probe) when the frame
     is not scan-rooted (shuffle/broadcast above the scan), reads
     non-local files, or has no file source at all. (Non-``file:``
-    schemes have no cheap driver-side size call here; at an
-    object-store deployment ``ensureParallelism.enabled=false`` remains
-    the intended no-op path — the input already has thousands of
-    splits.)
+    schemes have no cheap driver-side size call here.)
 
-    Repeat calls over the same file set are memoized (``_SPLIT_MEMO``)
-    and huge listings are stride-sampled (``_SPLIT_STAT_CAP``), so the
-    stat loop is bounded and runs at most once per distinct table.
+    The split confs come from the planner's own typed getters, so
+    size suffixes read exactly as Spark reads them, and file sizes are
+    stat-ed on every call, so a table overwritten in place is sized
+    afresh.
     """
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
@@ -268,41 +236,22 @@ def _estimate_scan_partitions(df: DataFrame) -> int | None:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — estimation is best-effort
         return None
-    if not files:
+    if not files or not all(f.startswith("file:") for f in files):
         return None
-    spark = df.sparkSession
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-    max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-    cores = max(1, spark.sparkContext.defaultParallelism)
-    # the listing itself is the key, so two listings never share an entry
-    key = (tuple(files), open_cost, max_part, cores)
-    cached = _SPLIT_MEMO.get(key)
-    if cached is not None:
-        return cached
-    if not all(f.startswith("file:") for f in files):
-        return None
-    sample = files
-    if len(files) > _SPLIT_STAT_CAP:
-        # deterministic stride sample; parquet files in one table dir
-        # are near-uniform, so the extrapolated total lands within the
-        # decision band (and the split math pads per-file open cost
-        # with the EXACT file count regardless)
-        sample = files[:: -(-len(files) // _SPLIT_STAT_CAP)]
     total = 0
-    for f in sample:
+    for f in files:
         try:
             total += os.path.getsize(f.removeprefix("file:"))
         except OSError:
             return None
-    if len(sample) < len(files):
-        total = total * len(files) // len(sample)
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    max_part = conf.filesMaxPartitionBytes()
+    cores = max(1, spark.sparkContext.defaultParallelism)
     padded = total + len(files) * open_cost
     max_split = min(max_part, max(open_cost, padded // cores))
-    splits = max(1, -(-padded // max(1, max_split)))
-    if len(_SPLIT_MEMO) >= _SPLIT_MEMO_MAX:
-        _SPLIT_MEMO.clear()
-    _SPLIT_MEMO[key] = splits
-    return splits
+    return max(1, -(-padded // max(1, max_split)))
 
 
 def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -312,8 +261,8 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     core idle, which turns expression-heavy per-row work (shingling,
     hashing, pandas UDFs) into a serial bottleneck. Round-robin
     repartition up to default parallelism when — and only when — the
-    scan produced fewer splits; at 100 TB the input already has
-    thousands of splits and this is a no-op (no shuffle added).
+    scan produced fewer splits; otherwise this is a no-op (no shuffle
+    added).
 
     The split count comes from a file-size estimate
     (:func:`_estimate_scan_partitions`) whenever the frame is
@@ -324,10 +273,9 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     driver time" cost, paid before every heavy dedup/multimodal/text
     query). Frames that are not scan-rooted (a shuffle or broadcast
     above the scan decides their partitioning) keep the exact probe.
-    A LARGE deployment where every input already has plenty of splits
-    can set ``spark.movie_etl.ensureParallelism.enabled=false`` to make
-    this a true no-op (r6 verdict note); the small-file fan-out then
-    never triggers, which is exactly right at that scale.
+    ``spark.movie_etl.ensureParallelism.enabled=false`` makes this a
+    true no-op — a physical-plan perturbation under which every catalog
+    result must stay the same.
     """
     spark = df.sparkSession
     if (

@@ -170,21 +170,17 @@ def test_rollback_movie_cascades_all_tables(graph):
     assert again["edges/ACTED_IN"].count() == rolled["edges/ACTED_IN"].count()
 
 
-def test_shared_node_checkpoint_level_flips_disk_only_past_cap(
+def test_shared_node_checkpoints_stay_memory_and_disk(
     spark, clean_movies, monkeypatch
 ):
-    """ADVICE r14: the size-conditional storage gate in build_movie_graph
-    (r14's g2 sf10 fix) must flip the shared Movie/Person checkpoints to
-    DISK_ONLY past _SHARED_NODES_MEMORY_MAX and keep MEMORY_AND_DISK
-    below it — pinned by spying the level handed to localCheckpoint,
-    since a regression in the gate is invisible below factor-30 scale."""
+    """reuse_shared checkpoints the shared Movie and Person tables at
+    MEMORY_AND_DISK — pinned by spying the level handed to
+    localCheckpoint."""
     # Spark 4: classic sessions instantiate the CONCRETE subclass in
     # pyspark.sql.classic.dataframe, whose localCheckpoint overrides the
     # abstract pyspark.sql.DataFrame one — patch where lookup resolves
     from pyspark.sql.classic.dataframe import DataFrame
     from pyspark.storagelevel import StorageLevel
-
-    from movie_etl_spark.plans import graph as graph_mod
 
     levels: list = []
     orig = DataFrame.localCheckpoint
@@ -194,18 +190,30 @@ def test_shared_node_checkpoint_level_flips_disk_only_past_cap(
         return orig(self, eager=eager, storageLevel=storageLevel)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 0)
-    build_movie_graph(clean_movies, reuse_shared=True)
-    assert levels == [StorageLevel.DISK_ONLY, StorageLevel.DISK_ONLY]
-
-    levels.clear()
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 2_000_000)
     build_movie_graph(clean_movies, reuse_shared=True)
     assert levels == [
         StorageLevel.MEMORY_AND_DISK,
         StorageLevel.MEMORY_AND_DISK,
     ]
+
+
+def test_acted_in_edge_build_hashes_the_shared_nodes(
+    spark, clean_movies, monkeypatch
+):
+    """reuse_shared hash-builds the shared node tables into ACTED_IN —
+    pinned by spying the hash_build_nodes flag handed to build_edges."""
+    from movie_etl_spark.plans import graph as graph_mod
+
+    hash_built: dict = {}
+    orig = graph_mod.build_edges
+
+    def spy(*a, **kw):
+        hash_built[a[5]] = bool(kw.get("hash_build_nodes", False))
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(graph_mod, "build_edges", spy)
+    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
+    assert hash_built["ACTED_IN"] is True
 
 
 def test_shared_node_checkpoints_inherit_the_job_group(spark, clean_movies):
@@ -217,52 +225,3 @@ def test_shared_node_checkpoints_inherit_the_job_group(spark, clean_movies):
     )
     assert len(grouped) >= 2
     assert ungrouped == set()
-
-
-def test_edge_build_hash_gate_falls_back_to_smj_on_small_heap(
-    spark, clean_movies, monkeypatch
-):
-    """r15 (VERDICT r14 item 5): past _SHARED_NODES_MEMORY_MAX the edge
-    builds keep their non-spillable SHUFFLE_HASH relations only when the
-    JVM heap affords them (measured floor 7 GiB at factor 100); on a
-    smaller heap they must fall back to spillable SortMergeJoin instead
-    of OOMing. Pinned by spying the hash_build_nodes flag handed to
-    build_edges under a forced-big corpus."""
-    from movie_etl_spark.plans import graph as graph_mod
-
-    flags: list = []
-    orig = graph_mod.build_edges
-    real_probe = graph_mod._session_heap_bytes
-
-    def spy(*a, **kw):
-        flags.append(bool(kw.get("hash_build_nodes", False)))
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(graph_mod, "build_edges", spy)
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 0)
-
-    monkeypatch.setattr(graph_mod, "_session_heap_bytes", lambda df: 1)
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
-    assert True not in flags  # every build spills via SMJ
-
-    flags.clear()
-    monkeypatch.setattr(
-        graph_mod, "_session_heap_bytes", lambda df: 64 * 1024**3
-    )
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
-    assert True in flags  # ACTED_IN keeps the hash fast path
-
-    # below the cap the heap probe must not even run (small corpora
-    # always hash): a raising probe proves the gate is size-scoped
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 2_000_000)
-    monkeypatch.setattr(
-        graph_mod,
-        "_session_heap_bytes",
-        lambda df: (_ for _ in ()).throw(AssertionError("probed")),
-    )
-    flags.clear()
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
-    assert True in flags
-
-    # and the live probe returns a sane positive byte count
-    assert real_probe(clean_movies) > 0

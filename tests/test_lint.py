@@ -1,13 +1,17 @@
-"""Source lint: the package has no runtime ``assert`` statements.
+"""Source lint over the package.
 
-``python -O`` strips asserts, so a check that guards a plan shape or an
-input would silently disappear; such checks must raise explicitly.
+- No runtime ``assert`` statements: ``python -O`` strips asserts, so a
+  check that guards a plan shape or an input would silently disappear;
+  such checks must raise explicitly.
+- The set of options the package reads (``spark.movie_etl.*`` confs and
+  ``SPARK_GRAFT_*`` environment variables) is pinned.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "movie_etl_spark"
 
@@ -20,3 +24,28 @@ def test_package_has_no_assert_statements():
         if isinstance(node, ast.Assert)
     ]
     assert hits == [], f"assert statements in the package: {hits}"
+
+
+#: every option the package reads: one conf key and the deployment
+#: environment. A new knob must change this set on purpose.
+OPTIONS = {
+    "spark.movie_etl.ensureParallelism.enabled",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_UI",
+    "SPARK_GRAFT_WAREHOUSE",
+}
+
+
+def test_package_reads_only_the_pinned_options():
+    option = re.compile(r"spark\.movie_etl\.[\w.]+|SPARK_GRAFT_\w+")
+    found = {
+        node.value
+        for path in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and option.fullmatch(node.value)
+    }
+    assert found == OPTIONS

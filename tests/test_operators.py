@@ -414,52 +414,6 @@ def test_pagerank_plan_has_two_joins_per_iteration(spark):
     release_caches()
 
 
-def test_reliable_checkpoint_knob_preserves_results(spark, tmp_path):
-    """r19 (VERDICT r18 item #5): with
-    spark.movie_etl.reliableCheckpoint.enabled=true and a checkpoint
-    dir set, every checkpoint_every-th iteration cuts lineage with a
-    RELIABLE DataFrame.checkpoint instead of localCheckpoint. The
-    knob must (a) produce bit-identical ranks, (b) actually write to
-    the checkpoint dir, and (c) stay inert by default."""
-    import os
-
-    from movie_etl_spark.operators.graph_algos import (
-        RELIABLE_CHECKPOINT_CONF,
-        pagerank_fixed_point,
-    )
-    from movie_etl_spark.session import release_caches
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1)], "src long, dst long"
-    )
-    baseline = {
-        r.node_id: r.rank
-        for r in pagerank_fixed_point(edges, 4, checkpoint_every=2).collect()
-    }
-    release_caches()
-
-    ckpt_dir = str(tmp_path / "reliable_ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt_dir)
-    spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
-    try:
-        with_knob = {
-            r.node_id: r.rank
-            for r in pagerank_fixed_point(
-                edges, 4, checkpoint_every=2
-            ).collect()
-        }
-    finally:
-        spark.conf.set(RELIABLE_CHECKPOINT_CONF, "false")
-        release_caches()
-    assert with_knob == baseline
-    written = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(ckpt_dir)
-        for f in fn
-    ]
-    assert written, "reliable checkpoint dir is empty — knob never fired"
-
-
 def test_connected_components_star_on_long_chain(spark):
     """The case hash-min label propagation handles worst (rounds =
     diameter): a 300-node path must collapse to one component rooted at
@@ -479,6 +433,21 @@ def test_connected_components_star_on_long_chain(spark):
     }
     assert got == {i: 0 for i in range(n)}
     release_caches()
+
+
+def test_connected_components_star_raises_without_fixpoint(spark):
+    """When the round budget runs out before the edge set is a star
+    forest, star must fail loudly instead of returning the leftover
+    edges as component ids."""
+    from movie_etl_spark.operators.graph_algos import (
+        connected_components_star,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        connected_components_star(edges, max_rounds=1)
 
 
 def test_connected_components_star_matches_union_find(spark):
@@ -523,36 +492,6 @@ def test_connected_components_star_matches_union_find(spark):
     }
     assert got == expected
     assert len({c for c in expected.values()}) > 1  # non-trivial graph
-    release_caches()
-
-
-def test_dup_clusters_star_algorithm_agrees(spark):
-    """dup_clusters(algorithm='star') must produce the identical
-    clustering as the default path on transitive chains — the contract
-    that makes star a drop-in for long-chain deployments."""
-    from movie_etl_spark.operators.dedup import dup_clusters
-    from movie_etl_spark.session import release_caches
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
-        "id_a long, id_b long",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in [1, 2, 3, 4, 10, 11, 20, 21, 22, 99]],
-        "doc_id long",
-    )
-    default = {
-        (r.doc_id, r.cluster_id)
-        for r in dup_clusters(pairs, nodes, "doc_id").collect()
-    }
-    star = {
-        (r.doc_id, r.cluster_id)
-        for r in dup_clusters(
-            pairs, nodes, "doc_id", algorithm="star"
-        ).collect()
-    }
-    assert star == default
-    assert (99, 99) in star  # singleton path intact
     release_caches()
 
 

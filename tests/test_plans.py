@@ -5,6 +5,7 @@ plans Catalyst actually produces — not just in docstrings.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -351,48 +352,92 @@ def test_estimate_scan_partitions_tracks_planner(spark):
 
 
 @needs_testdata
-def test_estimate_scan_partitions_memo_and_stat_cap(spark, tmp_path, monkeypatch):
-    """r19 (VERDICT r18 item #4): a repeat estimate over the same file
-    set must be a memo hit (zero stat syscalls), and a listing larger
-    than the stat cap must stride-sample instead of stat-ing every
-    file — no O(files) loop on the hot path — while still agreeing
-    with the planner within ±1 split."""
-    import os as _os
-
-    from movie_etl_spark import session as sess
+def test_estimate_scan_partitions_tracks_planner_on_many_files(spark, tmp_path):
+    """A multi-file scan is sized from every file's size and still
+    agrees with the planner within ±1 split."""
     from movie_etl_spark.session import _estimate_scan_partitions, load_table
 
-    monkeypatch.setattr(sess, "_SPLIT_MEMO", {})
-    calls = {"n": 0}
-    real_getsize = _os.path.getsize
-
-    def counting_getsize(path):
-        calls["n"] += 1
-        return real_getsize(path)
-
-    monkeypatch.setattr(sess.os.path, "getsize", counting_getsize)
-
-    df = load_table(spark, TESTDATA_SF0001, "orders")
-    first = _estimate_scan_partitions(df)
-    assert first is not None and calls["n"] > 0
-    stats_after_first = calls["n"]
-    again = _estimate_scan_partitions(load_table(spark, TESTDATA_SF0001, "orders"))
-    assert again == first
-    assert calls["n"] == stats_after_first, "memo hit must not re-stat"
-
-    # sampling path: 8 near-uniform files, cap forced below the count
     out = str(tmp_path / "many_files")
-    df.limit(800).repartition(8).write.parquet(out)
-    monkeypatch.setattr(sess, "_SPLIT_STAT_CAP", 4)
+    orders = load_table(spark, TESTDATA_SF0001, "orders")
+    orders.limit(800).repartition(8).write.parquet(out)
     many = spark.read.parquet(out)
-    calls["n"] = 0
+    assert len(many.inputFiles()) > 4
     est = _estimate_scan_partitions(many)
-    n_files = len(many.inputFiles())
-    assert n_files > 4
-    assert calls["n"] <= 4, "stat loop must be capped at the sample size"
     assert est is not None
     exact = many.rdd.getNumPartitions()
-    assert abs(est - exact) <= 1, f"sampled estimate {est} vs planner {exact}"
+    assert abs(est - exact) <= 1, f"estimate {est} vs planner {exact}"
+
+
+@contextlib.contextmanager
+def _split_confs(spark, max_partition_bytes: str, open_cost: str):
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k, None) for k in keys]
+    spark.conf.set(keys[0], max_partition_bytes)
+    spark.conf.set(keys[1], open_cost)
+    try:
+        yield
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+def _incompressible_parquet(spark, path: str, rows: int) -> str:
+    """One parquet file of md5 strings; returns the part file's path."""
+    from pyspark.sql import functions as F
+
+    spark.range(rows).select(
+        F.md5(F.col("id").cast("string")).alias("h")
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    (part,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    return os.path.join(path, part)
+
+
+def _crc(path: str) -> str:
+    """The local filesystem's checksum sidecar of ``path``."""
+    head, tail = os.path.split(path)
+    return os.path.join(head, f".{tail}.crc")
+
+
+def test_split_estimate_reads_size_suffixes_like_spark(spark, tmp_path):
+    """Split confs given with ``kb``/``mb`` suffixes are read the way the
+    planner reads them, so a multi-split scan's estimate stays within
+    ±1 of the planner's split count."""
+    from movie_etl_spark.session import _estimate_scan_partitions
+
+    path = str(tmp_path / "suffixed")
+    _incompressible_parquet(spark, path, 100_000)
+    with _split_confs(spark, "256kb", "4kb"):
+        df = spark.read.parquet(path)
+        est = _estimate_scan_partitions(df)
+        exact = df.rdd.getNumPartitions()
+    assert exact > 2, f"scan has {exact} splits; the case needs several"
+    assert est is not None and abs(est - exact) <= 1, (
+        f"estimate {est} vs planner {exact}"
+    )
+
+
+def test_split_estimate_follows_a_file_overwritten_in_place(spark, tmp_path):
+    """The estimate sizes the files as they are now: after a table's file
+    is overwritten in place with much larger content, the estimate grows
+    with it instead of repeating the old size."""
+    import shutil
+
+    from movie_etl_spark.session import _estimate_scan_partitions
+
+    table = str(tmp_path / "table")
+    part = _incompressible_parquet(spark, table, 10)
+    bigger = _incompressible_parquet(spark, str(tmp_path / "bigger"), 40_000)
+    with _split_confs(spark, "65536", "4096"):
+        before = _estimate_scan_partitions(spark.read.parquet(table))
+        for src, dst in ((bigger, part), (_crc(bigger), _crc(part))):
+            shutil.copyfile(src, dst)
+        df = spark.read.parquet(table)
+        after = _estimate_scan_partitions(df)
+        exact = df.rdd.getNumPartitions()
+    assert before is not None and exact > before + 2
+    assert after is not None and abs(after - exact) <= 1, (
+        f"estimate {after} vs planner {exact} after the overwrite"
+    )
 
 
 def _scan_listing(spark, tmp_path, files: list[str]):
@@ -405,53 +450,16 @@ def _scan_listing(spark, tmp_path, files: list[str]):
     return df
 
 
-def test_split_memo_keeps_same_length_listings_apart(spark, tmp_path, monkeypatch):
-    """Two distinct listings of the same length get their own memo
-    entries (each is stat-ed), even if every listing hashed alike."""
-    from movie_etl_spark import session as sess
+def test_split_estimate_declines_a_non_file_scheme(spark, tmp_path):
+    """One non-``file:`` path anywhere in the listing means no estimate:
+    there is no cheap driver-side size call for it."""
     from movie_etl_spark.session import _estimate_scan_partitions
 
-    monkeypatch.setattr(sess, "_SPLIT_MEMO", {})
-    monkeypatch.setattr(sess, "hash", lambda _: 0, raising=False)
-    calls = {"n": 0}
-    real_getsize = sess.os.path.getsize
-
-    def counting_getsize(path):
-        calls["n"] += 1
-        return real_getsize(path)
-
-    monkeypatch.setattr(sess.os.path, "getsize", counting_getsize)
-    paths = []
-    for i in range(4):
-        p = tmp_path / f"part-{i}"
-        p.write_bytes(b"x" * (i + 1))
-        paths.append(f"file:{p}")
-
-    assert _estimate_scan_partitions(
-        _scan_listing(spark, tmp_path, paths[:2])) is not None
-    first_stats = calls["n"]
-    assert _estimate_scan_partitions(
-        _scan_listing(spark, tmp_path, paths[2:])) is not None
-    assert calls["n"] > first_stats, "second listing must be stat-ed"
-    assert len(sess._SPLIT_MEMO) == 2
-
-
-def test_split_estimate_checks_every_scheme_before_sampling(
-    spark, tmp_path, monkeypatch
-):
-    """Above the stat cap only a stride sample is stat-ed, but one
-    non-``file:`` path anywhere in the listing still means no estimate."""
-    from movie_etl_spark import session as sess
-    from movie_etl_spark.session import _estimate_scan_partitions
-
-    monkeypatch.setattr(sess, "_SPLIT_MEMO", {})
-    monkeypatch.setattr(sess, "_SPLIT_STAT_CAP", 2)
     files = []
     for i in range(4):
         p = tmp_path / f"part-{i}"
         p.write_bytes(b"x")
         files.append(f"file:{p}")
-    # the stride sample (every 3rd of 5) skips index 1
     files.insert(1, "hdfs://namenode/warehouse/part-x")
     assert _estimate_scan_partitions(
         _scan_listing(spark, tmp_path, files)) is None

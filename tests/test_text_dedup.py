@@ -194,8 +194,8 @@ def test_simhash_properties(docs):
 
 
 def test_dup_clusters_paths_agree(spark):
-    """Driver union-find and distributed hash-min propagation must
-    produce identical clusters — including a CHAIN component (A-B, B-C,
+    """Driver union-find and the distributed star path must produce
+    identical clusters — including a CHAIN component (A-B, B-C,
     C-D: transitivity without direct pairs), a separate 2-cluster, and
     singletons."""
     from movie_etl_spark.operators.dedup import dup_clusters, release_indexes
@@ -577,12 +577,10 @@ def test_bpe_ish_tokens(spark):
     assert toks == ["The", " cat", "'s", " hat", ",", " isn", "'t", " 42", "!"]
 
 
-def test_dup_clusters_label_prop_nonconvergence_falls_back_to_star(spark):
-    """A component whose diameter exceeds max_iterations must NOT return
-    unconverged (silently wrong) labels: the label-prop path detects the
-    missed fixpoint and falls back to connected_components_star. Forced
-    here with a tiny driver_cc bound (so the distributed path runs) and
-    a 40-node chain against max_iterations=3."""
+def test_dup_clusters_chain_above_driver_bound_collapses_to_min(spark):
+    """Above the driver bound the distributed (star) path runs; a
+    40-node chain — the long-diameter case — must still collapse to one
+    cluster rooted at the min id 0."""
     from movie_etl_spark.operators.dedup import dup_clusters
     from movie_etl_spark.session import release_caches
 
@@ -594,11 +592,7 @@ def test_dup_clusters_label_prop_nonconvergence_falls_back_to_star(spark):
     got = {
         (r.doc_id, r.cluster_id)
         for r in dup_clusters(
-            pairs,
-            nodes,
-            "doc_id",
-            max_iterations=3,
-            driver_cc_max_edges=5,
+            pairs, nodes, "doc_id", driver_cc_max_edges=5
         ).collect()
     }
     assert got == {(i, 0) for i in range(n)}
