@@ -8,8 +8,8 @@ JSON line::
      "queries": {"<name>": <sec>, ...}, "sf": 0.1}
 
 Each query executes end-to-end through the noop sink (full plan runs,
-nothing collected to the driver — the 100 TB-shaped measurement: we
-time the distributed execution, not a driver-side materialization).
+nothing collected to the driver: we time the execution, not a
+driver-side materialization).
 
 Output-size contract (r6 lesson): the driver captures only the TAIL of
 stdout, and BENCH_r06.json lost its first ~20 per-query timings to that
@@ -34,14 +34,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from movie_etl_spark.plans.catalog import QUERIES  # noqa: E402
-from movie_etl_spark.session import get_spark  # noqa: E402
+from movie_etl_spark.session import get_spark, release_caches  # noqa: E402
 
-#: the default dataset — the ONE spelling every default-sf string
-#: comparison (lossless_target, quiet_sentinel_mins) keys off
+#: the default dataset — the ONE spelling the default-sf string
+#: comparison in lossless_target keys off
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 # normpath: a trailing slash in the env var must not defeat the
-# default-sf string comparisons in lossless_target/quiet_sentinel_mins
+# default-sf string comparison in lossless_target
 SF_DIR = os.path.normpath(os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
 
 
@@ -121,60 +121,22 @@ def host_window(before: list[int] | None, after: list[int] | None) -> dict:
 #: contended-run stamp (VERDICT r15 item #5). BENCH_r15.json carried
 #: steal_pct 5.46 yet nothing in-file marked the 248.9 s wall as a
 #: steal-burst, so a reader of the artifact alone could mistake it for
-#: a regression. A run is stamped ``"contended": true`` when either
-#: (a) hypervisor steal over the window is >= 1% (the r15 quiet close
-#: pairs measured 0.13–0.18%; the contended official run 5.46%), or
-#: (b) a sentinel query runs >2x its BENCH_QUIET monotone min. The
-#: sentinels are the cheapest plan-PINNED queries (s1 a pure scan; o1's
-#: TakeOrderedAndProject and d1's anti-join shape are plan-asserted by
-#: pytest and fingerprinted in PLAN_AUDIT.json), so a 2x cell on one of
-#: them indicts the host unless the round's plan audit also moved —
-#: and the stamp only ATTRIBUTES, it never waives adjudication: the
-#: quietbench >2x-suspect scan still runs over every query at close.
-#: Sentinel mins apply only at the default sf0.1 full-catalog shape
-#: (that is what BENCH_QUIET pins).
-SENTINELS = ("s1_discover", "o1_top_k", "d1_anti_join")
+#: a regression. A run is stamped ``"contended": true`` when hypervisor
+#: steal over the window is >= 1% (the r15 quiet close pairs measured
+#: 0.13–0.18%; the contended official run 5.46%). The stamp only
+#: ATTRIBUTES; it never waives an A/B comparison.
 STEAL_CONTENDED_PCT = 1.0
-SENTINEL_FACTOR = 2.0
 
 
-def contention(
-    host: dict, times: dict[str, float], quiet_mins: dict[str, float]
-) -> dict:
+def contention(host: dict) -> dict:
     """``{"contended": bool, "contended_reasons": [...]}`` for the run."""
-    reasons: list[str] = []
     steal = host.get("steal_pct")
     if steal is not None and steal >= STEAL_CONTENDED_PCT:
-        reasons.append(f"steal_pct {steal} >= {STEAL_CONTENDED_PCT}")
-    for name in SENTINELS:
-        t, qmin = times.get(name), quiet_mins.get(name)
-        if t is not None and qmin and t > SENTINEL_FACTOR * qmin:
-            reasons.append(
-                f"{name} {t} > {SENTINEL_FACTOR}x quiet min {qmin}"
-            )
-    if reasons:
-        return {"contended": True, "contended_reasons": reasons}
-    return {"contended": False}
-
-
-def quiet_sentinel_mins(sf_dir: str, selected: bool) -> dict[str, float]:
-    """Sentinel monotone mins from BENCH_QUIET.json — default-sf
-    full-catalog runs only (the quiet record is sf0.1-specific, and a
-    subset run's JVM warmup profile differs)."""
-    if selected or sf_dir != DEFAULT_SF_DIR:
-        return {}
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_QUIET.json"
-    )
-    try:
-        with open(path) as f:
-            rec = json.load(f)
         return {
-            n: rec[n]["min"] for n in SENTINELS
-            if n in rec and rec[n].get("min")
+            "contended": True,
+            "contended_reasons": [f"steal_pct {steal} >= {STEAL_CONTENDED_PCT}"],
         }
-    except Exception:  # noqa: BLE001 — a malformed quiet record must
-        return {}  # never crash a finished 4-minute bench run
+    return {"contended": False}
 
 
 def main() -> None:
@@ -187,8 +149,6 @@ def main() -> None:
     QUERIES["o1_top_k"].fn(spark, SF_DIR).write.format("noop").mode(
         "overwrite"
     ).save()
-
-    from movie_etl_spark.operators.dedup import release_indexes
 
     # per-query isolation: one broken query must not zero the whole
     # round's perf signal (r5 lesson: a single streaming failure crashed
@@ -213,7 +173,7 @@ def main() -> None:
             # multi-join plan; release it so ~90 queries in one session
             # don't accumulate executor storage (cache lifetime is
             # caller-owned by contract)
-            release_indexes()
+            release_caches()
 
     host = host_window(stat0, _proc_stat())
     out = {
@@ -223,9 +183,7 @@ def main() -> None:
         "queries": times,
         "sf": sf_from_dir(SF_DIR),
         **host,
-        **contention(
-            host, times, quiet_sentinel_mins(SF_DIR, bool(selected))
-        ),
+        **contention(host),
     }
     if errors:
         out["n_failed"] = len(errors)

@@ -24,12 +24,7 @@ from pyspark.sql import functions as F
 
 from movie_etl_spark.functions.text import char_shingles, doc_fingerprint, tokens
 from movie_etl_spark.session import cache_tracked as _persist
-from movie_etl_spark.session import ensure_parallelism, release_caches
-
-#: back-compat alias: the dedup operators persist their inverted
-#: indexes through the session-level registry (session.cache_tracked);
-#: callers release them with this after consuming results.
-release_indexes = release_caches
+from movie_etl_spark.session import ensure_parallelism
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -162,14 +157,14 @@ def near_dup_pairs_minhash(
     sides of the verification join — recomputing the explode 4x is the
     naive plan's dominant cost. At cluster scale the same index would
     be a checkpointed/bucketed table. Callers release the cache via
-    :func:`release_indexes`.
+    :func:`movie_etl_spark.session.release_caches`.
     """
     # the (id, fingerprint) frame is tiny (two columns) but its lineage
     # is a full-corpus normalize+md5 scan — persist it ONCE and derive
     # groups, star pairs AND the representative id set from the same
     # materialization (unpersisted, Spark recomputed the md5 pass for
     # every consumer: the r3 bench charged dd3 ~1s for the duplicated
-    # scans). Released with the shingle index via release_indexes().
+    # scans). Released with the shingle index via release_caches().
     fp = _persist(
         df.select(F.col(id_col), doc_fingerprint(text_col).alias("_fp"))
     )
@@ -301,7 +296,7 @@ def ngram_jaccard_pairs(
     # the gram inverted index feeds document frequencies, the candidate
     # join (twice) and the intersection join (twice): persist it once
     # (memory, spill-to-disk) instead of re-running the explode 5x;
-    # callers release via release_indexes(). Grams are carried as 60-bit
+    # callers release via release_caches(). Grams are carried as 60-bit
     # md5-prefix ints, not strings: five joins shuffle an 8-byte key
     # instead of a ~20-byte text gram (any hash collision is identical
     # in the oracle, which computes the same md5 prefix)

@@ -64,12 +64,12 @@ def build_edges(
         tails = F.broadcast(tails)
     if hash_build_nodes:
         # SHUFFLE_HASH (r13): callers pass this when the node frames'
-        # size statistics are broken — g2's reuse_shared path
+        # size statistics are broken — build_movie_graph
         # localCheckpoints Movie/Person, after which neither static
         # planning nor AQE will ever broadcast them and the semi joins
         # regress to SortMergeJoins that SORT the fat edges stream
         # (the two heaviest g2 stages spilled ~1.9 GB at sf3;
-        # stageprobe attribution, BASELINE.md "r13: graph family").
+        # per-stage attribution, BASELINE.md "r13: graph family").
         # Hash-building the key-only node side streams the fat side
         # with no sort — scale-safe: the build is per-partition
         # (keys/partitions rows), not a broadcast. Left OFF by default

@@ -173,11 +173,8 @@ def _grouped_dot_pairs(
     5-10x that Row objects cost (ADVICE r12); the resulting broadcast is
     registered with :func:`~movie_etl_spark.session.broadcast_tracked`
     and released by ``release_caches`` alongside the caches — the
-    default release ``unpersist()``s (a result DataFrame consumed after
-    the release transparently re-ships the value: benign recompute);
-    only ``release_caches(destroy_broadcasts=True)`` destroys, after
-    which consuming an unconsumed result is a hard task failure
-    (ADVICE r13 lifetime note).
+    release ``unpersist()``s, so a result DataFrame consumed after the
+    release transparently re-ships the value (benign recompute).
     """
     import numpy as np
     import pandas as pd

@@ -2050,7 +2050,7 @@ def q_g2_full_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # SHUFFLE_HASH on the skinny side (r13): the planner's default here
     # was a SortMergeJoin whose fat-side Sort — the collect_list'ed
-    # cast/crew arrays — spilled 4.75 GB at sf3 (stageprobe attribution,
+    # cast/crew arrays — spilled 4.75 GB at sf3 (per-stage attribution,
     # BASELINE.md "r13: graph family at the 100x point"). Building the
     # hash relation from orders (skinny, ~rows/32 per task) streams the
     # aggregated credits side with NO sort of the fat rows.
@@ -2120,7 +2120,7 @@ def q_g2_full_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             "parent_company_id"
         ),
     )
-    graph = build_movie_graph(clean, companies=companies, reuse_shared=True)
+    graph = build_movie_graph(clean, companies=companies)
 
     def num(c: str):
         return F.substring(F.col(c), 2, 12).cast("bigint")
@@ -3531,8 +3531,8 @@ def q_cc1_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # both sides derive from ONE scan: gram the corpus once, cache the
     # (doc, gram) index, split by id — halves the explode/hash work vs
-    # gramming train and bench separately (released by the session's
-    # release_indexes contract like the dedup indexes)
+    # gramming train and bench separately (released by
+    # session.release_caches like the dedup indexes)
     grams = cache_tracked(word_gram_keys(d, "text", "doc_id", n=3))
     bench_g = grams.filter(F.col("doc_id") % 50 == 0).withColumnRenamed(
         "doc_id", "bench_id"

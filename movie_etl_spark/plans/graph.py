@@ -14,8 +14,12 @@ relationship_id alone (1_constraints.cypher:15).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from movie_etl_spark.functions.cleaning import decode_department, relationship_id
 from movie_etl_spark.operators.joins import build_edges
@@ -61,7 +65,6 @@ def build_movie_graph(
     clean_movies: DataFrame,
     collections: DataFrame | None = None,
     companies: DataFrame | None = None,
-    reuse_shared: bool = False,
 ) -> dict[str, DataFrame]:
     """Assemble the node/edge table set. Returns a dict keyed by
     ``nodes/<Label>`` and ``edges/<REL_TYPE>``.
@@ -71,59 +74,48 @@ def build_movie_graph(
     the join key and AQE handles skew (one blockbuster movie with a
     10k-person crew is exactly the skewed-key case).
 
-    ``reuse_shared`` materializes (localCheckpoint, MEMORY_AND_DISK)
-    the two node tables every edge build joins against — Movie and
-    Person — so consumers that execute MANY of the returned tables as
-    separate actions (the 17-table full materialization; g2's parity
-    sweep) don't re-run the dedup-window lineage per action, and the
-    edge builds hash-build those checkpointed node sides. At sf1 the
-    two tables hold about 1.5M movies and ~0.5 GB, so they stay in
+    The two node tables every edge build joins against — Movie and
+    Person — are materialized eagerly (localCheckpoint,
+    MEMORY_AND_DISK), so consumers that execute MANY of the returned
+    tables as separate actions (the 17-table full materialization; g2's
+    parity sweep) don't re-run the dedup-window lineage per action, and
+    the edge builds hash-build those checkpointed node sides. At sf1
+    the two tables hold about 1.5M movies and ~0.5 GB, so they stay in
     memory at every supported scale. The EAGER materialization also
     matters: it runs the two dedup-window sorts to completion BEFORE
     the many-branch consumer action, so their execution peaks don't
     stack on the branch aggregates' (measured: splitting key-only
     checkpoints out and letting the full frames recompute inside the
     17-branch union raised the sf10 execution peak 3008 -> 4735 MB
-    and the wall 218 -> 350 s). Since r19 the two materializations run
-    CONCURRENTLY with each other (they are independent jobs over the
-    same checkpointed corpus — guide §2.6) while still preceding the
-    branch action. Leave False when only one or two tables will
-    execute.
+    and the wall 218 -> 350 s).
     """
     movies = movie_nodes(clean_movies)
     persons = person_nodes(clean_movies)
-    if reuse_shared:
-        # r19 (VERDICT r18 item #3): the two eager shared-node
-        # materializations are INDEPENDENT jobs over the same
-        # checkpointed corpus, so run them concurrently (guide §2.6 —
-        # overlap independent jobs; FIFO scheduling back-fills the
-        # small movie dedup into cores the bigger person explode+dedup
-        # leaves idle) instead of paying their walls serially. They
-        # still complete strictly BEFORE the many-branch consumer
-        # action, which is what the r14 serialized-peaks adjudication
-        # actually required — the only new overlap is the small movie
-        # sort on top of the person sort, bounded by the movie table's
-        # size, not the branch count.
-        # Each submitted callable is wrapped separately so each thread
-        # gets its own copy of the caller's local properties: the jobs
-        # keep the caller's job group and description.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-        from pyspark.storagelevel import StorageLevel
-
-        spark = clean_movies.sparkSession
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_movies = pool.submit(
-                inheritable_thread_target(spark)(movies.localCheckpoint),
-                storageLevel=StorageLevel.MEMORY_AND_DISK,
-            )
-            f_persons = pool.submit(
-                inheritable_thread_target(spark)(persons.localCheckpoint),
-                storageLevel=StorageLevel.MEMORY_AND_DISK,
-            )
-            movies = f_movies.result()
-            persons = f_persons.result()
+    # r19 (VERDICT r18 item #3): the two eager shared-node
+    # materializations are INDEPENDENT jobs over the same checkpointed
+    # corpus, so run them concurrently (guide §2.6 — overlap independent
+    # jobs; FIFO scheduling back-fills the small movie dedup into cores
+    # the bigger person explode+dedup leaves idle) instead of paying
+    # their walls serially. They still complete strictly BEFORE the
+    # many-branch consumer action, which is what the r14
+    # serialized-peaks adjudication actually required — the only new
+    # overlap is the small movie sort on top of the person sort, bounded
+    # by the movie table's size, not the branch count.
+    # Each submitted callable is wrapped separately so each thread gets
+    # its own copy of the caller's local properties: the jobs keep the
+    # caller's job group and description.
+    spark = clean_movies.sparkSession
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_movies = pool.submit(
+            inheritable_thread_target(spark)(movies.localCheckpoint),
+            storageLevel=StorageLevel.MEMORY_AND_DISK,
+        )
+        f_persons = pool.submit(
+            inheritable_thread_target(spark)(persons.localCheckpoint),
+            storageLevel=StorageLevel.MEMORY_AND_DISK,
+        )
+        movies = f_movies.result()
+        persons = f_persons.result()
     out: dict[str, DataFrame] = {"nodes/Movie": movies}
 
     genre_bridge = explode_bridge(clean_movies, "movie_id", "genre_ids", "genre_id")
@@ -159,7 +151,7 @@ def build_movie_graph(
         build_edges(
             acted, movies, persons, "movie_id", "person_id", "ACTED_IN",
             payload=["role"],
-            hash_build_nodes=reuse_shared,
+            hash_build_nodes=True,
         ),
         ["relationship_id"],
         order_col="role",
@@ -174,11 +166,8 @@ def build_movie_graph(
     # same checkpointed-stats fix as build_edges' hash_build_nodes:
     # hash-build the key-only node sides so the fat crew stream is
     # never sorted (see operators/joins.py)
-    crew_heads = movies.select("movie_id")
-    crew_tails = persons.select("person_id")
-    if reuse_shared:
-        crew_heads = crew_heads.hint("shuffle_hash")
-        crew_tails = crew_tails.hint("shuffle_hash")
+    crew_heads = movies.select("movie_id").hint("shuffle_hash")
+    crew_tails = persons.select("person_id").hint("shuffle_hash")
     crew_edges = (
         crew.join(crew_heads, "movie_id", "left_semi")
         .join(crew_tails, "person_id", "left_semi")

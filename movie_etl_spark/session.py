@@ -77,13 +77,9 @@ def get_spark(app_name: str = "movie-etl-spark", cpus: int | None = None) -> Spa
         # never sees the map stats it needs) — see OPTIMIZATION_r18.md.
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (benches measure compute, not the status
-        # store); SPARK_GRAFT_UI=true turns it on for probe runs that
-        # sample executor peakMemoryMetrics over its REST API
-        # (tools/memprobe.py, VERDICT r11 item 7). Port 0 = ephemeral,
-        # so concurrent probe sessions never collide.
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        .config("spark.ui.port", "0")
+        # UI off (Spark's default is on): runs measure compute, not the
+        # status store; per-stage figures come from the event log
+        .config("spark.ui.enabled", "false")
         # keep saveAsTable/bucketBy output out of the repo cwd (static
         # conf — must be set before the session exists)
         .config(
@@ -140,19 +136,15 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-#: DataFrames persisted by operators whose plans reuse an intermediate
-#: several times. Operators return lazy DataFrames, so they cannot
-#: unpersist their own caches — callers that run many queries in one
-#: session (bench.py, tools/selfcheck.py, the driver shim) release them
-#: via :func:`release_caches` after consuming each result.
-_CACHED: list[DataFrame] = []
-
-#: sparkContext.broadcast handles built by operators (the IVF grouped-
-#: scoring matrices). Unlike SQL-plan broadcasts (which the JVM
-#: reference-tracks), a pickled sc.broadcast lives until destroy() — a
-#: long bench session calling ivf_top_k repeatedly would otherwise
-#: accumulate broadcast blocks in the driver and executors (ADVICE r12).
-_BROADCASTS: list = []
+#: Persisted DataFrames and ``sc.broadcast`` handles built by operators
+#: (dedup indexes, BSP state, the IVF grouped-scoring matrices).
+#: Operators return lazy DataFrames, so they cannot release their own
+#: caches; callers that run many queries in one session (bench.py,
+#: tools/selfcheck.py, the driver shim) call :func:`release_caches`
+#: after consuming each result. A pickled ``sc.broadcast``, unlike a
+#: SQL-plan broadcast, lives until released, so without this a long
+#: session accumulates broadcast blocks in the driver and executors.
+_TRACKED: list = []
 
 
 def cache_tracked(df: DataFrame, storage_level=None) -> DataFrame:
@@ -166,33 +158,26 @@ def cache_tracked(df: DataFrame, storage_level=None) -> DataFrame:
     aggregates (the r11 g2 checkpoint lesson; gr1's sf10 OOM, r13).
     """
     df = df.persist(storage_level) if storage_level is not None else df.persist()
-    _CACHED.append(df)
+    _TRACKED.append(df)
     return df
 
 
 def broadcast_tracked(bc):
     """Register an sc.broadcast for release alongside the caches."""
-    _BROADCASTS.append(bc)
+    _TRACKED.append(bc)
     return bc
 
 
-def release_caches(blocking: bool = False, destroy_broadcasts: bool = False) -> None:
-    """Unpersist every operator-cached DataFrame and every operator-built
-    sc.broadcast registered so far.
+def release_caches() -> None:
+    """Unpersist every DataFrame and sc.broadcast registered so far.
 
-    Broadcasts are ``unpersist()``-ed by default: executor and driver
-    blocks are dropped, but a still-referenced result DataFrame (e.g.
-    an ``ivf_top_k`` output consumed *after* this call) transparently
-    re-ships the value at its next action — benign recompute, same as
-    the DataFrame caches.  Pass ``destroy_broadcasts=True`` only at
-    terminal teardown (end of a bench session): ``destroy()`` makes any
-    later task dereference a hard failure at action time (ADVICE r13).
+    An unpersisted broadcast is not destroyed: a still-referenced result
+    DataFrame (e.g. an ``ivf_top_k`` output consumed *after* this call)
+    re-ships the value at its next action — a benign recompute, the
+    same as for the DataFrame caches.
     """
-    while _CACHED:
-        _CACHED.pop().unpersist(blocking=blocking)
-    while _BROADCASTS:
-        bc = _BROADCASTS.pop()
-        bc.destroy() if destroy_broadcasts else bc.unpersist(blocking=blocking)
+    while _TRACKED:
+        _TRACKED.pop().unpersist()
 
 
 #: logical operators under which the first executed stage is no longer

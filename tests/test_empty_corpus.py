@@ -42,8 +42,8 @@ def empty_sf_dir(spark, tmp_path_factory):
 
 @needs_testdata
 def test_every_query_survives_empty_corpus(spark, empty_sf_dir):
-    from movie_etl_spark.operators.dedup import release_indexes
     from movie_etl_spark.plans.catalog import QUERIES
+    from movie_etl_spark.session import release_caches
 
     failures = {}
     for name, qd in QUERIES.items():
@@ -53,5 +53,5 @@ def test_every_query_survives_empty_corpus(spark, empty_sf_dir):
         except Exception as e:  # noqa: BLE001 — collecting the full list
             failures[name] = f"{type(e).__name__}: {str(e)[:160]}"
         finally:
-            release_indexes()
+            release_caches()
     assert not failures, f"{len(failures)} queries break on empty input: {failures}"

@@ -173,7 +173,7 @@ def test_rollback_movie_cascades_all_tables(graph):
 def test_shared_node_checkpoints_stay_memory_and_disk(
     spark, clean_movies, monkeypatch
 ):
-    """reuse_shared checkpoints the shared Movie and Person tables at
+    """The build checkpoints the shared Movie and Person tables at
     MEMORY_AND_DISK — pinned by spying the level handed to
     localCheckpoint."""
     # Spark 4: classic sessions instantiate the CONCRETE subclass in
@@ -190,7 +190,7 @@ def test_shared_node_checkpoints_stay_memory_and_disk(
         return orig(self, eager=eager, storageLevel=storageLevel)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-    build_movie_graph(clean_movies, reuse_shared=True)
+    build_movie_graph(clean_movies)
     assert levels == [
         StorageLevel.MEMORY_AND_DISK,
         StorageLevel.MEMORY_AND_DISK,
@@ -200,7 +200,7 @@ def test_shared_node_checkpoints_stay_memory_and_disk(
 def test_acted_in_edge_build_hashes_the_shared_nodes(
     spark, clean_movies, monkeypatch
 ):
-    """reuse_shared hash-builds the shared node tables into ACTED_IN —
+    """The build hash-builds the shared node tables into ACTED_IN —
     pinned by spying the hash_build_nodes flag handed to build_edges."""
     from movie_etl_spark.plans import graph as graph_mod
 
@@ -212,7 +212,7 @@ def test_acted_in_edge_build_hashes_the_shared_nodes(
         return orig(*a, **kw)
 
     monkeypatch.setattr(graph_mod, "build_edges", spy)
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
+    graph_mod.build_movie_graph(clean_movies)
     assert hash_built["ACTED_IN"] is True
 
 
@@ -221,7 +221,7 @@ def test_shared_node_checkpoints_inherit_the_job_group(spark, clean_movies):
     must carry the caller's job group like every other job of the build."""
     grouped, ungrouped = jobs_in_group(
         spark, "g2-shared-nodes",
-        lambda: build_movie_graph(clean_movies, reuse_shared=True),
+        lambda: build_movie_graph(clean_movies),
     )
     assert len(grouped) >= 2
     assert ungrouped == set()

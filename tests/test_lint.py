@@ -5,15 +5,19 @@
   such checks must raise explicitly.
 - The set of options the package reads (``spark.movie_etl.*`` confs and
   ``SPARK_GRAFT_*`` environment variables) is pinned.
+- Every tool imports: a kept tool that imports a deleted module fails
+  here, not at its next manual run.
 """
 
 from __future__ import annotations
 
 import ast
+import importlib.util
 import pathlib
 import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "movie_etl_spark"
+TOOLS = PKG.parent / "tools"
 
 
 def test_package_has_no_assert_statements():
@@ -33,7 +37,6 @@ OPTIONS = {
     "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_UI",
     "SPARK_GRAFT_WAREHOUSE",
 }
 
@@ -49,3 +52,15 @@ def test_package_reads_only_the_pinned_options():
         and option.fullmatch(node.value)
     }
     assert found == OPTIONS
+
+
+def test_every_tool_imports():
+    """Load each tool as a module (its ``main`` runs only as a script)."""
+    broken = {}
+    for path in sorted(TOOLS.glob("*.py")):
+        spec = importlib.util.spec_from_file_location(f"_tool_{path.stem}", path)
+        try:
+            spec.loader.exec_module(importlib.util.module_from_spec(spec))
+        except Exception as exc:  # noqa: BLE001 — report every tool at once
+            broken[path.name] = f"{type(exc).__name__}: {exc}"
+    assert broken == {}

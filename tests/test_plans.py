@@ -199,6 +199,13 @@ def test_ensure_parallelism_conf_bypass(spark):
         spark.conf.set("spark.movie_etl.ensureParallelism.enabled", "true")
 
 
+def test_get_spark_turns_the_ui_off(spark):
+    """Spark's UI is on by default; the session pins it off, so no run
+    pays for the status store or binds a port."""
+    assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
+    assert spark.sparkContext.uiWebUrl is None
+
+
 @needs_testdata
 def test_gr4_triangle_closure_is_equi_join_only(spark):
     """The wedge-closure join must be a hash/sort-merge equi-join: an
@@ -244,7 +251,6 @@ def test_all_query_outputs_are_atomic_columns(spark):
     query's output schema and reject non-atomic top-level columns."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from movie_etl_spark.operators.dedup import release_indexes
     from movie_etl_spark.session import release_caches
 
     offenders = []
@@ -259,7 +265,6 @@ def test_all_query_outputs_are_atomic_columns(spark):
     finally:
         # a query builder raising mid-loop must not leak its persisted
         # indexes/caches into the rest of the pytest session
-        release_indexes()
         release_caches()
     assert not offenders, (
         f"queries whose output the driver cannot canonicalize: {offenders}"

@@ -507,36 +507,23 @@ def test_release_caches_releases_grouped_scoring_broadcast(spark):
     """ADVICE r12 + r13: the grouped path's pickled sc.broadcast (the
     per-centroid matrices) must be tracked by release_caches — repeated
     ivf_top_k calls in one bench session must not accumulate broadcast
-    blocks.  The default release UNPERSISTS (a result consumed after
-    the release re-ships the value — benign recompute, ADVICE r13);
-    only the terminal ``destroy_broadcasts=True`` form destroys."""
+    blocks.  The release UNPERSISTS (a result consumed after the
+    release re-ships the value — benign recompute, ADVICE r13)."""
+    from pyspark import Broadcast
+
     from movie_etl_spark import session as sess
     from movie_etl_spark.operators.similarity import ivf_top_k
 
     sess.release_caches()
-    assert not sess._BROADCASTS
+    assert not sess._TRACKED
     rows = [(i, [1.0 * (i % 5), -1.0, 2.0, 0.5]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     ivf_top_k(df, df, k=2, n_centroids=4, n_probe=2).collect()
-    assert len(sess._BROADCASTS) == 1
-    bc = sess._BROADCASTS[0]
+    bcs = [t for t in sess._TRACKED if isinstance(t, Broadcast)]
+    assert len(bcs) == 1
     sess.release_caches()
-    assert not sess._BROADCASTS
-    assert bc.value is not None  # unpersisted, NOT destroyed: still usable
-
-    # terminal form: destroy — the pickled driver file is unlinked, so
-    # any task (or uncached driver read) that dereferences it fails
-    import os
-
-    sess._BROADCASTS.append(bc)
-    sess.release_caches(destroy_broadcasts=True)
-    assert not sess._BROADCASTS
-    assert not os.path.exists(bc._path)
-    del bc._value  # drop the driver-side cache to prove the load fails
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        bc.value
+    assert not sess._TRACKED
+    assert bcs[0].value is not None  # unpersisted, NOT destroyed: still usable
 
 
 def test_block_topk_keep_verdicts_and_margins():

@@ -198,7 +198,8 @@ def test_dup_clusters_paths_agree(spark):
     identical clusters — including a CHAIN component (A-B, B-C,
     C-D: transitivity without direct pairs), a separate 2-cluster, and
     singletons."""
-    from movie_etl_spark.operators.dedup import dup_clusters, release_indexes
+    from movie_etl_spark.operators.dedup import dup_clusters
+    from movie_etl_spark.session import release_caches
 
     pairs = spark.createDataFrame(
         [(1, 3), (3, 5), (5, 7), (10, 11)], "id_a long, id_b long"
@@ -213,7 +214,7 @@ def test_dup_clusters_paths_agree(spark):
                 pairs, nodes, "doc_id", driver_cc_max_edges=threshold
             ).collect()
         }
-        release_indexes()
+        release_caches()
         return out
 
     driver, distributed = run(10**6), run(0)

@@ -8,7 +8,6 @@ regression fails in seconds, not at the next driver round.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -18,7 +17,6 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir, "tools")
 )
 
-from quietbench import _discard, _merge_run, _restore, _set_aside  # noqa: E402
 from selfcheck import canon, driver_canon_probe, frame_digest  # noqa: E402
 
 
@@ -71,81 +69,6 @@ def test_frame_digest_is_row_order_insensitive():
     h1, _ = frame_digest(["a"], [(1,), (2,)])
     h2, _ = frame_digest(["a"], [(2,), (1,)])
     assert h1 == h2
-
-
-def test_quietbench_merge_accumulates_and_caps(tmp_path):
-    """Per-run merge semantics: history unions across invocations, the
-    cap drops the OLDEST runs, and the all-time min SURVIVES eviction
-    (the r10 lesson: the window cap let g2's recorded min drift upward
-    as targeted runs evicted its best readings)."""
-    rec = str(tmp_path / "BENCH_QUIET.json")
-    _merge_run(rec, {"q1": 2.0})
-    _merge_run(rec, {"q1": 1.5, "q2": 9.0})
-    data = json.loads(open(rec).read())
-    assert data["q1"] == {"min": 1.5, "runs": [2.0, 1.5], "n": 2}
-    assert data["q2"]["min"] == 9.0
-    for i in range(15):  # cap is 12: early runs (incl. the 1.5) age out
-        _merge_run(rec, {"q1": 3.0 + i})
-    data = json.loads(open(rec).read())
-    assert data["q1"]["n"] == 12
-    assert len(data["q1"]["runs"]) == 12
-    # 17 total runs, window keeps the last 12 (3.0+3 .. 3.0+14) — but
-    # the min is monotone: the evicted 1.5 reading stays the floor
-    assert data["q1"]["runs"][0] == 6.0
-    assert data["q1"]["min"] == 1.5
-    # a legacy record without a "min" field still merges (min over runs)
-    legacy = str(tmp_path / "LEGACY.json")
-    json.dump({"q1": {"runs": [4.0], "n": 1}}, open(legacy, "w"))
-    _merge_run(legacy, {"q1": 5.0})
-    assert json.loads(open(legacy).read())["q1"]["min"] == 4.0
-
-
-def test_quietbench_set_aside_restores_on_failure(tmp_path):
-    """r9 ADVICE: a bench.py crash on run 1 must not leave the committed
-    BENCH_LOCAL.json deleted from the working tree — the pre-run file is
-    moved aside and restored on the failure paths."""
-    path = str(tmp_path / "BENCH_LOCAL.json")
-    with open(path, "w") as f:
-        f.write('{"committed": true}')
-    backup = _set_aside(path)
-    assert not os.path.exists(path)  # fresh run cannot re-read stale file
-    # failure path (bench produced nothing): the committed record returns
-    _restore(path, backup)
-    assert json.loads(open(path).read()) == {"committed": True}
-    assert not os.path.exists(backup)
-    # success path: bench wrote a replacement — restore must NOT clobber
-    backup = _set_aside(path)
-    with open(path, "w") as f:
-        f.write('{"fresh": true}')
-    _restore(path, backup)  # no-op: replacement exists
-    assert json.loads(open(path).read()) == {"fresh": True}
-    _discard(backup)
-    assert not os.path.exists(backup)
-    # absent file: set-aside is a no-op and restore/discard tolerate None
-    missing = str(tmp_path / "BENCH_SUBSET.json")
-    assert _set_aside(missing) is None
-    _restore(missing, None)
-    _discard(None)
-    assert not os.path.exists(missing)
-    # corrupt-replacement path (r10 ADVICE): bench.py killed mid-write
-    # leaves a truncated file — the backup must win over it
-    backup = _set_aside(path)
-    with open(path, "w") as f:
-        f.write('{"queries": {"q1": 1.2')  # truncated JSON
-    _restore(path, backup)
-    assert json.loads(open(path).read()) == {"fresh": True}
-    assert not os.path.exists(backup)
-
-
-def test_quietbench_merge_partial_run_keeps_other_queries(tmp_path):
-    """A targeted re-pin must not erase the rest of the record (the
-    selfcheck-style MERGE contract)."""
-    rec = str(tmp_path / "BENCH_QUIET.json")
-    _merge_run(rec, {"q1": 1.0, "q2": 2.0})
-    _merge_run(rec, {"q2": 1.8})
-    data = json.loads(open(rec).read())
-    assert data["q1"]["runs"] == [1.0]
-    assert data["q2"]["runs"] == [2.0, 1.8]
 
 
 def test_scale_up_cipher_maps_are_bijective_distinct_and_sf1_compatible():
@@ -225,29 +148,6 @@ def test_bench_lossless_target_failed_run_writes_sidecar():
     )
 
 
-def test_solo_sweep_merge_retires_pass_to_fail_regression():
-    """ADVICE r14 (medium): a targeted re-run whose query newly FAILS
-    must retire the stale passing entry — not double-book the query in
-    both 'queries' and 'errors'."""
-    from solo_sweep import _merge_prev
-
-    prev = {
-        "sf_dir": "/tmp/sf10",
-        "queries": {"g2": {"wall_s": 176.7}, "v3": {"wall_s": 83.1}},
-        "errors": {"dd9": "OOM"},
-    }
-    # re-run g2 (now fails) and dd9 (now passes)
-    results, errors = _merge_prev(
-        prev, "/tmp/sf10", ["g2", "dd9"],
-        {"dd9": {"wall_s": 91.5}}, {"g2": "rc=137"},
-    )
-    assert "g2" not in results and errors == {"g2": "rc=137"}
-    assert results == {"v3": {"wall_s": 83.1}, "dd9": {"wall_s": 91.5}}
-    # a different sf_dir must not merge at all
-    r2, e2 = _merge_prev(prev, "/tmp/sf3", ["g2"], {}, {"g2": "rc=1"})
-    assert r2 == {} and e2 == {"g2": "rc=1"}
-
-
 def test_bench_host_window_steal_and_busy_attribution():
     """r15: bench.py samples /proc/stat across the run; steal/busy must
     be computed from the deltas, and a missing sample yields {} (never a
@@ -274,37 +174,66 @@ def test_bench_host_window_steal_and_busy_attribution():
 
 def test_bench_contention_stamp():
     """VERDICT r15 item #5: the official artifact must carry its own
-    contended/quiet adjudication — >=1% steal or a pure-scan sentinel
-    >2x its quiet min stamps contended:true with named reasons."""
+    contended/quiet adjudication — >=1% hypervisor steal over the run
+    window stamps contended:true with the reason named."""
     import bench
 
-    quiet = {"s1_discover": 0.70, "o1_top_k": 0.20}
-    # quiet host, sentinels at their mins -> not contended
-    out = bench.contention(
-        {"steal_pct": 0.15}, {"s1_discover": 0.75, "o1_top_k": 0.21}, quiet
-    )
-    assert out == {"contended": False}
-    # the r15 shape: 5.46% steal AND s1 at 6.35x its min
-    out = bench.contention(
-        {"steal_pct": 5.46}, {"s1_discover": 4.47, "o1_top_k": 0.21}, quiet
-    )
-    assert out["contended"] is True
-    assert any("steal_pct 5.46" in r for r in out["contended_reasons"])
-    assert any("s1_discover" in r for r in out["contended_reasons"])
-    # sentinel inflation alone (steal probe missed the burst) still trips
-    out = bench.contention({}, {"o1_top_k": 0.55}, quiet)
-    assert out["contended"] is True
-    # missing host sample + no quiet record -> explicit quiet verdict
-    assert bench.contention({}, {"s1_discover": 9.9}, {}) == {
-        "contended": False
+    assert bench.contention({"steal_pct": 0.15}) == {"contended": False}
+    out = bench.contention({"steal_pct": 5.46, "busy_pct": 80.0})
+    assert out == {
+        "contended": True,
+        "contended_reasons": ["steal_pct 5.46 >= 1.0"],
     }
-    # sentinel-min loader: subset and off-default-sf runs get no mins
-    assert bench.quiet_sentinel_mins("/tmp/sf3", False) == {}
-    assert bench.quiet_sentinel_mins("/root/testdata/sf0.1", True) == {}
-    mins = bench.quiet_sentinel_mins("/root/testdata/sf0.1", False)
-    assert set(mins) <= set(bench.SENTINELS) and all(
-        v > 0 for v in mins.values()
+    # the threshold itself is contended
+    assert bench.contention({"steal_pct": 1.0})["contended"] is True
+    # missing host sample -> explicit quiet verdict, never a crash
+    assert bench.contention({}) == {"contended": False}
+
+
+def test_ab_runner_summarize_counts_pairs_and_applies_the_gain_rule():
+    """Ten alternating pairs: s1 is won by new in 9 and tied in 1; o1
+    failed in pair 3's new pass (left out of that pair's count) and
+    old wins pair 5; the totals of pair 3 are null. Medians and
+    quartiles are the inclusive-method quartiles of each side."""
+    from ab_runner import summarize
+
+    s1_old = [1.0, 1.1, 1.2, 1.3, 1.4, 1.5, 1.6, 1.7, 1.8, 1.9]
+    s1_new = [0.5, 0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85, 0.9, 1.9]
+    o1_old = [0.3] * 10
+    o1_new = [0.2, 0.2, 0.2, None, 0.2, 0.4, 0.2, 0.2, 0.2, 0.2]
+    passes = []
+    for i in range(10):
+        for side, s1, o1 in (("old", s1_old, o1_old), ("new", s1_new, o1_new)):
+            queries = {"s1": s1[i]}
+            if o1[i] is not None:
+                queries["o1"] = o1[i]
+            total = None if o1[i] is None else round(s1[i] + o1[i], 2)
+            passes.append(
+                {"side": side, "i": i, "total": total, "queries": queries}
+            )
+    out = summarize(passes)
+
+    s1 = out["queries"]["s1"]
+    assert (s1["pairs"], s1["new_wins"], s1["old_wins"], s1["ties"]) == (
+        10, 9, 0, 1
     )
+    assert s1["old"] == pytest.approx({"median": 1.45, "q1": 1.225, "q3": 1.675})
+    assert s1["new"] == pytest.approx({"median": 0.725, "q1": 0.6125, "q3": 0.8375})
+    # 9 of 10 won and a 0.725 s median gap against old's 0.45 s IQR
+    assert s1["gain"] is True
+
+    o1 = out["queries"]["o1"]
+    assert (o1["pairs"], o1["new_wins"], o1["old_wins"], o1["ties"]) == (
+        9, 8, 1, 0
+    )
+    assert o1["old"] == pytest.approx({"median": 0.3, "q1": 0.3, "q3": 0.3})
+    assert o1["new"] == pytest.approx({"median": 0.2, "q1": 0.2, "q3": 0.2})
+    # 8 of 9 is below nine tenths, and 9 pairs are fewer than ten
+    assert o1["gain"] is False
+
+    total = out["total"]
+    assert (total["pairs"], total["new_wins"], total["old_wins"]) == (9, 9, 0)
+    assert total["gain"] is False  # only 9 pairs counted
 
 
 def test_close_run_timeout_is_a_fail_row_not_a_crash():
@@ -347,66 +276,10 @@ def test_ledger_commit_artifacts_in_scratch_repo(tmp_path):
     assert run("git", "log", "--oneline").stdout == log
 
 
-def test_stageprobe_wall_null_is_visible_and_sorts_last():
-    """ADVICE r15: an unparseable REST timestamp must surface as
-    wall_s=None (visible null in the table), never a silent 0.0, and
-    --by=time sorting must not crash on the None."""
-    from stageprobe import _stage_wall_s
-
-    good = {
-        "firstTaskLaunchedTime": "2026-08-16T10:00:00.000GMT",
-        "completionTime": "2026-08-16T10:00:02.500GMT",
-    }
-    assert _stage_wall_s(good) == 2.5
-    # format drift -> None, not 0.0
-    assert _stage_wall_s({"firstTaskLaunchedTime": "16/08/2026",
-                          "completionTime": "16/08/2026"}) is None
-    assert _stage_wall_s({}) is None
-    # the REAL sort key stage_table uses: None sorts below every wall
-    from stageprobe import _sort_key
-
-    rows = [{"wall_s": None}, {"wall_s": 0.1}, {"wall_s": 5.0}]
-    rows.sort(key=_sort_key("wall_s"), reverse=True)
-    assert [r["wall_s"] for r in rows] == [5.0, 0.1, None]
-
-
-def test_quietbench_until_quiet_predicate():
-    """r16: --until-quiet runs the N base runs unconditionally, then
-    keeps hunting until a run self-reports contended:false or CAP."""
-    from quietbench import _should_run
-
-    # plain mode: exactly n runs regardless of quietness
-    assert _should_run(0, 2, False, 8, False)
-    assert _should_run(1, 2, False, 8, False)
-    assert not _should_run(2, 2, False, 8, False)
-    assert not _should_run(2, 2, False, 8, True)
-    # until-quiet: base runs always happen, even if run 0 was quiet
-    assert _should_run(1, 2, True, 8, True)
-    # past n: continue only while no quiet run yet and under cap
-    assert _should_run(2, 2, True, 8, False)
-    assert not _should_run(2, 2, True, 8, True)
-    assert not _should_run(8, 2, True, 8, False)
-
-
-def test_quietbench_sf_suffix():
-    """r17: the sf1 quiet hunt writes per-scale records — sf1 protocol
-    mins must never merge into the sf0.1 BENCH_QUIET.json (a 10x-data
-    min would poison the >2x suspect scan in both directions)."""
-    from quietbench import _sf_suffix
-
-    assert _sf_suffix("/root/testdata/sf0.1") == ""
-    assert _sf_suffix("/root/testdata/sf1") == "_SF1.0"
-    assert _sf_suffix("/root/testdata/sf3") == "_SF3.0"
-    # ADVICE r17: a no-match dir follows bench's -1.0 spelling (the old
-    # '_SFALT' fallback desynced from bench's lossless name and made
-    # quietbench discard a completed run)
-    assert _sf_suffix("/somewhere/else") == "_SF-1.0"
-
-
 def test_sf_from_dir_requires_leading_digit():
     """ADVICE r17: 'sf' followed by a bare '.' (e.g. /data/sf.cache)
-    used to match and crash float('.') at import time in BOTH bench and
-    quietbench; a dotted name like sf1.2.3 is likewise not a scale."""
+    used to match and crash float('.') at import time; a dotted name
+    like sf1.2.3 is likewise not a scale."""
     import bench
 
     assert bench.sf_from_dir("/data/sf.cache") == -1.0
@@ -414,57 +287,3 @@ def test_sf_from_dir_requires_leading_digit():
     assert bench.sf_from_dir("/no/match/at/all") == -1.0
     assert bench.sf_from_dir("/root/testdata/sf0.01") == 0.01
     assert bench.sf_from_dir("/root/testdata/sf10") == 10.0
-
-
-def test_quietbench_lossless_names_track_bench():
-    """quietbench re-derives bench.py's lossless filename in a second
-    spelling (the ADVICE r16 desync class): pin the two rules to each
-    other so a bench.py rename surfaces here instead of quietbench
-    silently reporting 'no BENCH_*.json' after every alternate-sf run."""
-    import bench
-    from quietbench import DEFAULT_SF_DIR, _sf_suffix
-
-    assert DEFAULT_SF_DIR == bench.DEFAULT_SF_DIR
-    # includes the no-match ('/mnt/bigdata') and bare-dot ('sf.cache')
-    # paths — the exact desync/crash classes from ADVICE r17
-    for sf_dir in (bench.DEFAULT_SF_DIR, "/tmp/sf1", "/tmp/sf3",
-                   "/tmp/sf10", "/mnt/bigdata", "/data/sf.cache",
-                   "/data/sf1.2.3"):
-        derived = f"BENCH{_sf_suffix(sf_dir) or '_LOCAL'}.json"
-        assert derived == bench.lossless_target(
-            selected=False, sf_dir=sf_dir, failed=False
-        )
-    # targeted runs own BENCH_SUBSET.json at every scale in both rules
-    assert bench.lossless_target(True, "/tmp/sf1", False) == \
-        "BENCH_SUBSET.json"
-
-
-def test_quietbench_cap_validation(monkeypatch, capsys):
-    """ADVICE r16: an empty/garbage --until-quiet=CAP must exit 2 with a
-    message, not raise an uncaught ValueError; and CAP is a bound on
-    TOTAL runs, so n > cap clamps n down (base runs count toward it)."""
-    import quietbench
-
-    for bad in ("--until-quiet=", "--until-quiet=x", "--until-quiet=0",
-                "--until-quiet=-3"):
-        monkeypatch.setattr(sys, "argv", ["quietbench", bad])
-        assert quietbench.main() == 2
-        assert "invalid --until-quiet cap" in capsys.readouterr().err
-    # n=10 with cap=1: the clamp means exactly one total run; stub the
-    # subprocess layer so no real bench fires
-    calls = []
-    monkeypatch.setattr(sys, "argv", ["quietbench", "10", "--until-quiet=1"])
-    monkeypatch.setattr(quietbench, "_set_aside", lambda p: None)
-    monkeypatch.setattr(quietbench, "_restore", lambda p, b: None)
-
-    class _Out:
-        returncode = 1
-        stdout = ""
-        stderr = "stubbed"
-
-    monkeypatch.setattr(
-        quietbench.subprocess, "run",
-        lambda *a, **k: calls.append(1) or _Out(),
-    )
-    quietbench.main()
-    assert len(calls) == 1

@@ -18,11 +18,6 @@ sf3 = 60k -> 600k -> 1.8M vectors) shows the operator is linear in
 the corpus at fixed Q; the catalog cells' super-linear growth is the
 pinned Q ∝ N construction, not an operator defect.  Evidence
 consumer: BASELINE.md "r12: v1/v2/v3 quadratic-cell adjudication".
-
-Memory ceiling (VERDICT r11 item 7): run with ``SPARK_GRAFT_UI=true``
-and each step also records the JVM's lifetime-peak memory metrics via
-tools/memprobe.py (peaks are monotone across steps — a step's reading
-is "the ceiling so far"; the first step that raises it owns it).
 """
 
 from __future__ import annotations
@@ -33,8 +28,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.memprobe import peak_memory  # noqa: E402
 
 from movie_etl_spark.session import get_spark, load_table  # noqa: E402
 
@@ -78,11 +71,10 @@ def main() -> None:
         t0 = time.perf_counter()
         df = builders[name]()
         df.write.format("noop").mode("overwrite").save()
-        rec = {"wall_s": round(time.perf_counter() - t0, 2), "rows": df.count()}
-        mem = peak_memory(spark)
-        if mem is not None:
-            rec["peak_memory_mb"] = mem
-        out["ops"][name] = rec
+        out["ops"][name] = {
+            "wall_s": round(time.perf_counter() - t0, 2),
+            "rows": df.count(),
+        }
     print(json.dumps(out))
 
 

@@ -50,7 +50,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from movie_etl_spark.session import get_spark, load_table  # noqa: E402
+from movie_etl_spark.session import get_spark, load_table, release_caches  # noqa: E402
 
 #: planted twins get vec_id + this (max real vec_id at factor 100 is
 #: ~1e8; vec_id is int64 so no overflow) and every 20th vector twins.
@@ -93,7 +93,6 @@ def main() -> None:
         _auto_band_layout,
         dup_clusters,
         embedding_near_dup_pairs,
-        release_indexes,
     )
 
     spark = get_spark("band_probe")
@@ -137,8 +136,7 @@ def main() -> None:
     out["n_pairs"] = pairs.count()
     if planted:
         out["recall"] = round(out["n_pairs"] / planted, 4)
-    _sample_peak(spark, out, "pairs_peak_memory_mb")
-    release_indexes()
+    release_caches()
 
     t0 = time.perf_counter()
     pairs = embedding_near_dup_pairs(
@@ -148,21 +146,8 @@ def main() -> None:
         "overwrite"
     ).save()
     out["clusters_wall_s"] = round(time.perf_counter() - t0, 2)
-    _sample_peak(spark, out, "clusters_peak_memory_mb")
-    release_indexes()
+    release_caches()
     print(json.dumps(out, separators=(",", ":")))
-
-
-def _sample_peak(spark, out: dict, key: str) -> None:
-    """Memory-ceiling column of the solo-probe protocol (VERDICT r11
-    item 7): lifetime-peak executor memory so far, sampled after each
-    shape — present only when the session runs with SPARK_GRAFT_UI=true
-    (the REST status store the sampler reads is off by default)."""
-    from tools.memprobe import peak_memory
-
-    mem = peak_memory(spark)
-    if mem is not None:
-        out[key] = mem
 
 
 if __name__ == "__main__":

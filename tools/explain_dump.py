@@ -13,8 +13,7 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from movie_etl_spark.plans.catalog import QUERIES  # noqa: E402
-from movie_etl_spark.session import get_spark  # noqa: E402
-from movie_etl_spark.operators.dedup import release_indexes  # noqa: E402
+from movie_etl_spark.session import get_spark, release_caches  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(
@@ -37,7 +36,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt)} chars)")
-        release_indexes()
+        release_caches()
 
 
 if __name__ == "__main__":

@@ -39,7 +39,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from movie_etl_spark.plans.catalog import QUERIES  # noqa: E402
-from movie_etl_spark.session import get_spark  # noqa: E402
+from movie_etl_spark.session import get_spark, release_caches  # noqa: E402
 
 MARKERS = {
     "exchanges": r"\bExchange\b",
@@ -74,8 +74,6 @@ def main() -> None:
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from movie_etl_spark.operators.dedup import release_indexes
-
     out: dict[str, dict] = {}
     for name, qd in QUERIES.items():
         if names and name not in names:
@@ -89,7 +87,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — record and continue
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
         finally:
-            release_indexes()
+            release_caches()
 
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

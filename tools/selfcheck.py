@@ -89,7 +89,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
-    from movie_etl_spark.session import get_spark
+    from movie_etl_spark.session import get_spark, release_caches
 
     spark = get_spark("selfcheck")
     con = duckdb.connect()
@@ -98,8 +98,6 @@ def main() -> int:
         if os.path.isdir(path):  # Spark-written dir (e.g. tools/scale_up.py)
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
-    from movie_etl_spark.operators.dedup import release_indexes
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -127,7 +125,7 @@ def main() -> int:
             # release persisted inverted-index caches on BOTH paths — a
             # failed query must not leave its index pinned in executor
             # storage for the rest of the session
-            release_indexes()
+            release_caches()
         if name not in oracles:
             print(f"rows  {name}: {len(rows)} rows (rows-only check) [{time.time()-t0:.1f}s]")
             rec(name, {"hash_match": False, "err": "no_oracle",
